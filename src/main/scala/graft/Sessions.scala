@@ -57,6 +57,21 @@ object Sessions {
     .config("spark.sql.ui.retainedExecutions", "8")
     .config("spark.ui.retainedJobs", "100")
     .config("spark.ui.retainedStages", "200")
+    // Spark keeps 100 generated classes by default, but one ETL spine
+    // batch uses ~150 cache entries and one index-ingest batch ~330, so
+    // every batch recompiled what the previous one had just compiled
+    // (traced: 147 and 325 Janino compiles per measured batch, ~14 ms
+    // each, down to 0 and 12 with this cap). Each entry retains ~28 KB
+    // of old gen (its class loader, source key and bytecode), so the
+    // cap bounds the cache at ~28 MB. Static: read once per JVM, when
+    // Spark first generates code.
+    .config("spark.sql.codegen.cache.maxEntries", "1024")
+    // without the stage id in generated class names, identical
+    // whole-stage bodies at different stage positions share one cache
+    // entry (distinct entries per index-ingest run: 446 -> 356). That
+    // is what keeps the larger cache's retained heap inside budget;
+    // plans still print the stage id as *(n).
+    .config("spark.sql.codegen.useIdInClassName", "false")
     .getOrCreate()
   }
 }

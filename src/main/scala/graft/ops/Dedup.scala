@@ -1074,6 +1074,9 @@ object Dedup {
     * so expected bucket size (and the pair join's fan-in) is n/32768
     * instead of n/16. Recall for hamming <= 3 is still exact by pigeonhole
     * (3 flipped bits cannot touch all 4 bands).
+    *
+    * Precondition: `idCol` is unique, as for [[simhashDupPairs]] — dedup
+    * the ids first (e.g. [[keepFirst]]) when the input may repeat one.
     */
   def simhashDupPairs60(df: DataFrame, idCol: String, textCol: String,
                         maxHamming: Int = 3): DataFrame = {
@@ -1115,6 +1118,12 @@ object Dedup {
     * The corpus-scale variant is [[simhashDupPairs60]] (q55): 15-bit
     * bands → 32768 LSH buckets per band, the same plan shape with a
     * bucket count that actually bounds the per-bucket join at scale.
+    *
+    * Precondition: `idCol` is unique. The first-match-wins banding names
+    * each pair once only when every id has one signature; a repeated id
+    * emits one row per copy per band and can name a pair once per
+    * copy. Dedup the ids first (e.g. [[keepFirst]]) — the check is left
+    * to the caller so the hot path runs no extra job.
     */
   def simhashDupPairs(df: DataFrame, idCol: String, textCol: String,
                       maxHamming: Int = 3): DataFrame = {
@@ -1348,8 +1357,10 @@ object Dedup {
     * only through the small-star merge at the hub; stopping there
     * mislabels 3 as its own component (caught by the generated-input
     * CC-triple property; the q130 fixture never produces the shape).
-    * The check is counts + except on checkpointed frames (edge frames
-    * are O(nodes) after the first rounds, far smaller than the corpus).
+    * The check is one union-plus-aggregate job per round over the three
+    * checkpointed edge frames (`sum(tag) == 7` for every edge ⟺ all
+    * three sets are equal); edge frames are O(nodes) after the first
+    * rounds, far smaller than the corpus.
     *
     * Returns (doc_id, component) for every node in some pair, component =
     * the smallest doc_id in the node's connected component — identical

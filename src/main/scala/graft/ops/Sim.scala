@@ -231,7 +231,9 @@ object Sim {
           sum(when(col("__hit"), element_at(wLit, col("rk")))
             .otherwise(0L)).as("dcg"),
           min(when(col("__hit"), col("rk"))).as("first_hit"))
-      broadcast(qFrame).join(perQ, Seq("q_id"), "left")
+      // perQ (one row per query) is the build side: a hint on qFrame,
+      // the preserved side of the left join, would be ignored
+      qFrame.join(broadcast(perQ), Seq("q_id"), "left")
         .withColumn("idcg", element_at(pLit, col("n_t")))
         // integral DIV throughout — no double division anywhere, so
         // there is no float rounding for the engines to disagree on

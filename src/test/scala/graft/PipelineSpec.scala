@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ops.Pipeline
@@ -9,22 +9,30 @@ import graft.ops.Pipeline
   * data model (FIXTURES.md §1 golden edge rows: duplicate ids, URL-only
   * content, missing selftext, zero-filled pivot cells, argmax ties).
   */
+object PipelineSpec {
+  // (id, title, selftext, created_utc, url, subreddit)
+  def raw(spark: SparkSession): DataFrame = {
+    import spark.implicits._
+    Seq(
+      ("a", "Dropout risk", "I will drop out", 1710000000L, "u/a", "srA"),
+      ("a", "Dropout risk OLD", "dup row", 1690000000L, "u/a0", "srA"),
+      ("b", "university fees!!!", null, 1700000000L, "u/b", "srA"),
+      ("c", "http://x.co university", null, 1700000100L, "u/c", "srA"),
+      ("d", "irrelevant post", "nothing", 1700000200L, "u/d", "srA"),
+      ("e", "spark fast university", null, 1710000100L, "u/e", "srB"),
+      ("f", "university slow", null, 1700000300L, "u/f", "srB"),
+      ("g", "dropout university dirty", null, 1710000200L, "u/g", "srB")
+    ).toDF("id", "title", "selftext", "created_utc", "url", "subreddit")
+  }
+
+  val keywords: Seq[String] = Seq("dropout", "university")
+}
+
 class PipelineSpec extends SparkSpec {
   import spark.implicits._
+  import PipelineSpec.keywords
 
-  // (id, title, selftext, created_utc, url, subreddit)
-  private def raw: DataFrame = Seq(
-    ("a", "Dropout risk", "I will drop out", 1710000000L, "u/a", "srA"),
-    ("a", "Dropout risk OLD", "dup row", 1690000000L, "u/a0", "srA"),
-    ("b", "university fees!!!", null, 1700000000L, "u/b", "srA"),
-    ("c", "http://x.co university", null, 1700000100L, "u/c", "srA"),
-    ("d", "irrelevant post", "nothing", 1700000200L, "u/d", "srA"),
-    ("e", "spark fast university", null, 1710000100L, "u/e", "srB"),
-    ("f", "university slow", null, 1700000300L, "u/f", "srB"),
-    ("g", "dropout university dirty", null, 1710000200L, "u/g", "srB")
-  ).toDF("id", "title", "selftext", "created_utc", "url", "subreddit")
-
-  private val keywords = Seq("dropout", "university")
+  private def raw: DataFrame = PipelineSpec.raw(spark)
 
   private def extracted = Pipeline.extract(raw, keywords, 1000)
   private def enriched = Pipeline.transform(extracted)
