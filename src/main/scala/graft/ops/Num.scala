@@ -20,8 +20,23 @@ object Num {
     floor(c * p) / p
   }
 
-  /** [[floorAt]] for a plain JVM double (typed-Dataset code paths run
-    * outside Catalyst) — the identical IEEE multiply/floor/divide.
+  /** [[floorAt]] evaluated on a plain JVM double, bit-identical to
+    * Spark: Spark's `floor(double)` returns BIGINT, so the floored value
+    * passes through a `(long)` cast before the divide — NaN floors to
+    * 0.0 and ±Inf or |x·10^dp| ≥ 2^63 saturate at ±(2^63−1)/10^dp. For
+    * typed code that must match a Spark-side [[floorAt]] exactly.
+    */
+  def floorAtLong(x: Double, dp: Int): Double = {
+    require(dp >= 0, s"floorAtLong requires dp >= 0, got $dp")
+    val p = math.pow(10, dp)
+    math.floor(x * p).toLong.toDouble / p
+  }
+
+  /** The DuckDB oracle's [[floorAtSql]] on a plain JVM double: DuckDB's
+    * `floor(double)` keeps the double, so NaN and ±Inf pass through.
+    * Agrees with [[floorAt]] (and [[floorAtLong]]) on every finite
+    * |x·10^dp| < 2^63; typed-Dataset code paths whose oracle is DuckDB
+    * use it.
     */
   def floorDouble(x: Double, dp: Int): Double = {
     require(dp >= 0, s"floorDouble requires dp >= 0, got $dp")

@@ -61,7 +61,13 @@ object Present {
       * sort child). Same rows, same total order as a plain `orderBy`;
       * the plan shows `Exchange rangepartitioning` over a
       * `Scan ExistingRDD` leaf instead of over a second copy of the
-      * operator pipeline. */
+      * operator pipeline.
+      *
+      * Tradeoff: `localCheckpoint` gives up lineage recovery — if an
+      * executor holding checkpointed blocks is lost, the query fails
+      * instead of recomputing them — and the blocks stay pinned for the
+      * life of the session unless the caller unpersists them (Bench
+      * does, between queries). */
     def presentLargeBy(cols: String*): DataFrame =
       presentLargeByCols(cols.map(col): _*)
 

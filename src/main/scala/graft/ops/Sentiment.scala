@@ -55,14 +55,6 @@ object Sentiment {
           acc.getField("s") / acc.getField("n")).otherwise(lit(0.0))),
       4)
 
-  /** The oracle-side lexicon as a SQL VALUES list (scores cast to DOUBLE —
-    * DuckDB would otherwise type bare decimals as DECIMAL and change the
-    * arithmetic).
-    */
-  def lexiconValuesSql: String =
-    Lexicon.map { case (w, s) => s"('$w', CAST($s AS DOUBLE))" }
-      .mkString(", ")
-
   /** Full DuckDB expression (no lateral needed): computes the matched-score
     * list inline. `cleanedExpr` must be a DuckDB expression yielding the
     * cleaned text. Mirrors `score` exactly.

@@ -1,9 +1,10 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.types.{DoubleType, IntegerType, StructField, StructType}
 
 /** Similarity search over an embedding column (`array<float>`), north-star
   * extension (SURVEY.md §7.3 M4).
@@ -262,67 +263,112 @@ object Sim {
     * near-copies when the corpus has them; MMR penalizes each next pick
     * by its similarity to what is already picked).
     *
-    * Shape: ONE lazy DAG, zero driver actions. Relevance pairs are
-    * scored once (the q40 broadcast skeleton) and localCheckpoint'd;
-    * each of the k greedy rounds is then an anti-join against the
-    * picked set (k·|Q| rows — broadcast), a diversity join against the
-    * picked VECTORS (also broadcast), and one per-query
-    * WindowGroupLimit-prunable argmax. Candidates never shuffle for
-    * the joins; cost is k× the [[topK]] window pass.
+    * Shape: ONE execution, zero driver actions. Relevance pairs are
+    * scored once (the q40 broadcast skeleton: candidates stream
+    * through a BroadcastNestedLoopJoin against the query side), then
+    * hash-shuffled by q_id and sorted by c_id within each query; the k
+    * greedy rounds run per query in [[mmrGreedy]], in plain Scala over
+    * that query's candidate list. No joins, windows or checkpoints per
+    * round: each round folds the newest pick into every remaining
+    * candidate's running max diversity, O(k·n·dim) per query.
+    *
+    * Per-task bound: one query's candidate list — n rows of (id,
+    * vector, norm, rel), about n × (16 + 4·dim) bytes of data, a few
+    * times that as decoded JVM rows — is held in one task. MMR re-ranks
+    * a RETRIEVED set, so n is bounded by construction: pass the
+    * retrieved candidates, not a corpus (q244 passes its whole fixture,
+    * which is that small).
     *
     * Determinism across engines: rel and div are 4dp-floored doubles
-    * (Num.floorAt), and the λ-combination is two IEEE multiplies and a
-    * subtract on identical inputs with λ and (1−λ) interpolated into
+    * (Spark's Num.floorAt; the kernel floors with its bit-identical
+    * Num.floorAtLong), and the λ-combination is two IEEE multiplies and
+    * a subtract on identical inputs with λ and (1−λ) interpolated into
     * the oracle at full Scala-double precision — bit-identical in
-    * Spark and DuckDB. Ties break to the lowest c_id.
+    * Spark and DuckDB. Ties break to the lowest c_id; a null score
+    * (null or mismatched vectors) ranks last.
+    *
+    * Candidate ids must be unique per query: a repeat (duplicate
+    * candidate ids, or a repeated query id) fails the task with the
+    * remedy instead of picking one copy at random.
     */
   def mmrTopK(queries: DataFrame, candidates: DataFrame, k: Int,
               lambda: Double = 0.7, idCol: String = "vec_id",
               vecCol: String = "embedding"): DataFrame = {
+    require(k >= 1, s"mmrTopK requires k >= 1, got $k")
     val pairs = cSide(candidates, idCol, vecCol)
       .crossJoin(broadcast(qSide(queries, idCol, vecCol)))
       .where(col("q_id") =!= col("c_id"))
       .select(col("q_id"), col("c_id"), col("c_vec"), col("c_norm"),
         Num.floorAt(dot(col("q_vec"), col("c_vec")) /
           (col("q_norm") * col("c_norm")), 4).as("rel"))
-      .localCheckpoint()
-    val lam = lit(lambda)
-    val om = lit(1.0 - lambda)
-    val w = Window.partitionBy("q_id")
-      .orderBy(col("mmr").desc, col("c_id").asc)
-    var selected: DataFrame = null
-    for (i <- 1 to k) {
-      val remaining =
-        if (selected == null) pairs
-        else pairs.join(broadcast(selected.select("q_id", "c_id")),
-          Seq("q_id", "c_id"), "left_anti")
-      val withDiv =
-        if (selected == null) remaining.withColumn("div", lit(0.0))
-        else remaining
-          .join(broadcast(selected
-            .select(col("q_id"), col("s_vec"), col("s_norm"))), Seq("q_id"))
-          .withColumn("d", Num.floorAt(dot(col("c_vec"), col("s_vec")) /
-            (col("c_norm") * col("s_norm")), 4))
-          .groupBy("q_id", "c_id")
-          .agg(first(col("rel")).as("rel"), first(col("c_vec")).as("c_vec"),
-            first(col("c_norm")).as("c_norm"), max(col("d")).as("div"))
-      // checkpoint each round's winner frame (n_queries rows): round
-      // i+1 references `selected` THREE times (anti-join, diversity
-      // join, union), so an unbroken lineage grows ~3^k — at k=5 the
-      // final plan carried ~80 copies of round 1 and analysis alone
-      // cost seconds (measured: q244 4.4 s -> ~1 s with the cut). The
-      // greedy result is identical; only the lineage is truncated.
-      val winner = withDiv
-        .withColumn("mmr", lam * col("rel") - om * col("div"))
-        .withColumn("rn", row_number().over(w)).where(col("rn") === 1)
-        .select(col("q_id"), col("c_id"), lit(i).as("rk"), col("mmr"),
-          col("c_vec").as("s_vec"), col("c_norm").as("s_norm"))
-        .localCheckpoint()
-      selected =
-        if (selected == null) winner else selected.unionByName(winner)
-    }
-    selected.select(col("q_id"), col("rk"), col("c_id"),
-      Num.floorAt(col("mmr"), 4).as("mmr"))
+    // the kernel's c·s divide mirrors Spark's: ANSI throws on a zero
+    // divisor, legacy mode yields null
+    val ansi = queries.sparkSession.conf.get("spark.sql.ansi.enabled")
+      .toBoolean
+    val out = StructType(Seq(pairs.schema("q_id"),
+      StructField("rk", IntegerType, nullable = false), pairs.schema("c_id"),
+      StructField("mmr", DoubleType)))
+    pairs.groupBy("q_id")
+      .as[Row, Row](Encoders.row(StructType(Seq(pairs.schema("q_id")))),
+        Encoders.row(pairs.schema))
+      .flatMapSortedGroups(col("c_id"))((q: Row, rows: Iterator[Row]) =>
+        mmrGreedy(q.get(0), rows, k, lambda, ansi))(Encoders.row(out))
+      .select(col("q_id"), col("rk"), col("c_id"),
+        Num.floorAt(col("mmr"), 4).as("mmr"))
+  }
+
+  /** The greedy rounds of [[mmrTopK]] for one query, over its pair rows
+    * `(q_id, c_id, c_vec, c_norm, rel)` in ascending c_id order. Every
+    * value is the one the per-round SQL form computes: round 1 scores
+    * with div = 0.0; a later round's div is the max over picked s of
+    * floorAt(dot(c,s)/(c_norm·s_norm), 4), ignoring nulls (all null →
+    * null). mmr orders descending with nulls last and ties to the
+    * lowest c_id (the first in input order); it is emitted unfloored.
+    */
+  private def mmrGreedy(qId: Any, rows: Iterator[Row], k: Int,
+                        lambda: Double, ansi: Boolean): Iterator[Row] = {
+    val rs = rows.toArray
+    val n = rs.length
+    for (i <- 1 until n if rs(i).get(1) == rs(i - 1).get(1))
+      throw new IllegalArgumentException(s"mmrTopK: candidate id " +
+        s"${rs(i).get(1)} appears twice for query $qId — dedup candidate " +
+        "ids first (a repeated query id repeats every candidate too)")
+    def num(i: Int, field: Int): Option[Double] =
+      Option(rs(i).get(field)).map(_.asInstanceOf[Double])
+    // a vector with a null element is null to every dot_f32 it enters
+    val vecs = rs.map(r => Option(r.getSeq[Any](2)).filterNot(_.contains(null))
+      .map(_.map(_.asInstanceOf[Float]).toArray))
+    // floorAt(dot(a, b) / (an · bn), 4) with dot_f32's and Divide's nulls
+    // (ANSI throws on a zero divisor with a non-null dot; legacy: null)
+    def cos(a: Int, b: Int): Option[Double] =
+      for (an <- num(a, 3); bn <- num(b, 3); x <- vecs(a); y <- vecs(b)
+           if x.length == y.length && (ansi || an * bn != 0.0)) yield {
+        if (an * bn == 0.0) throw new ArithmeticException(
+          "[DIVIDE_BY_ZERO] zero norm in the mmrTopK diversity cosine of " +
+            s"candidates ${rs(a).get(1)} and ${rs(b).get(1)}")
+        val dot = x.indices.foldLeft(0.0)((s, i) => s + x(i).toDouble * y(i))
+        Num.floorAtLong(dot / (an * bn), 4)
+      }
+    val om = 1.0 - lambda
+    val picked = new Array[Boolean](n)
+    val div = Array.fill[Option[Double]](n)(None)
+    (1 to math.min(k, n)).map { rk =>
+      val mmr = Array.tabulate(n)(i =>
+        for (rel <- num(i, 4); d <- if (rk == 1) Some(0.0) else div(i))
+          yield lambda * rel - om * d)
+      // Spark's double order: NaN is largest, 0.0 and -0.0 tie
+      val best = (0 until n).filterNot(picked(_)).reduce((a, b) =>
+        (mmr(a), mmr(b)) match {
+          case (Some(x), Some(y))
+            if y != x && java.lang.Double.compare(y, x) > 0 => b
+          case (None, Some(_)) => b
+          case _ => a
+        })
+      picked(best) = true
+      for (i <- 0 until n if rk < k && !picked(i); d <- cos(i, best))
+        div(i) = Some(div(i).fold(d)(math.max(_, d)))
+      Row(qId, rk, rs(best).get(1), mmr(best).getOrElse(null))
+    }.iterator
   }
 
   /** HARD-negative mining: per anchor, the k most-similar candidates with

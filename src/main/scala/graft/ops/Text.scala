@@ -275,14 +275,11 @@ object Text {
     nTokens >= 10 && meanLen >= 3.0 && meanLen <= 10.0 &&
       symRatio <= 0.1 && topBigram <= 0.2
 
-  /** Document fingerprint: md5 of the normalized text plus a 60-bit prefix
-    * as a numeric key. md5 is bit-identical across Spark and DuckDB, so the
-    * oracle reproduces it exactly (unlike murmur/xxhash which differ).
+  /** Document fingerprint: md5 of the normalized text. md5 is
+    * bit-identical across Spark and DuckDB, so the oracle reproduces it
+    * exactly (unlike murmur/xxhash which differ).
     */
   def fingerprint(c: Column): Column = md5(cleanText(c))
-
-  def fingerprint60(c: Column): Column =
-    conv(substring(fingerprint(c), 1, 15), 16, 10).cast("long")
 
   /** BM25 per-(doc, term) relevance with top-k terms per doc. Constants
     * k1=1.5, b=0.75 are chosen as EXACT binary fractions (so are 0.25,

@@ -587,7 +587,7 @@ private[graft] object Reg6MonitorAnn {
 
     // ANN — MMR diversified re-ranking (Sim.mmrTopK scaladoc): greedy
     // top-5 at λ=0.7 over the q40 query set; each pick penalized by its
-    // max cosine to what is already picked. One lazy DAG, zero driver
+    // max cosine to what is already picked. One execution, zero driver
     // actions; the oracle unrolls the same 5 greedy rounds.
     "q244_mmr_rerank" -> ((s, dir) =>
       Sim.mmrTopK(

@@ -21,10 +21,6 @@ import org.apache.spark.sql.types.StructType
   */
 object Sources {
 
-  def readParquet(spark: SparkSession, path: String,
-                  schema: StructType): DataFrame =
-    spark.read.schema(schema).parquet(path)
-
   def readCsv(spark: SparkSession, path: String,
               schema: StructType): DataFrame =
     spark.read.schema(schema).option("header", "true").csv(path)
@@ -82,9 +78,6 @@ object Sources {
         .option("encoding", "UTF-8").csv(path)
       true
     }
-
-  def writeParquet(df: DataFrame, path: String): Unit =
-    df.write.mode("overwrite").parquet(path)
 
   /** Partitioned parquet sink: directory-partition by low-cardinality
     * keys so partition predicates prune at the file listing.

@@ -863,23 +863,6 @@ object StreamOps {
     runToAppendTable(build(eventsStream(ns, stage)))
   }
 
-  /** Two-stream variant of [[runBoundedGateAppend]]: `build` receives
-    * two INDEPENDENT streams over the same staged files (each with its
-    * own file-source progress — micro-batches pair arbitrarily between
-    * the sides, which is exactly the state-retention stress a
-    * stream-stream join gate wants).
-    */
-  def runBoundedGateAppend2(spark: SparkSession, sfDir: String,
-                            nFiles: Int, statePartitions: Int)
-                           (build: (DataFrame, DataFrame) => DataFrame)
-      : DataFrame = {
-    val stage = stageEvents(spark, sfDir, nFiles)
-    val ns = spark.newSession()
-    ns.conf.set("spark.sql.shuffle.partitions", statePartitions.toString)
-    runToAppendTable(
-      build(eventsStream(ns, stage), eventsStream(ns, stage)))
-  }
-
   /** Stage the events fixture as `nFiles` files and then a SECOND copy
     * of each (mtimes ascending: originals first, copies after) — the
     * replay delivers every row TWICE, in two different micro-batches.
@@ -1176,58 +1159,6 @@ object StreamOps {
     labels.join(sizes, Seq("component"))
       .select(col("doc_id"), col("component"), col("n_members"),
         (col("doc_id") === col("component")).as("is_survivor"))
-  }
-
-  /** The oracle-gate bridge for the incremental-CC STORE: replay the
-    * documents fixture as `nFiles` micro-batches straight through
-    * [[incrementalCCBatch]] (no admission filter — every doc folds in,
-    * so the standing labels must equal batch CC over the WHOLE fixture,
-    * i.e. the q128/q130/q140 oracle string: one oracle, FOUR engines),
-    * then return the final committed label frame with the q128
-    * member-count/survivor projection. Store + checkpoint are fresh per
-    * call — the versioned fold is the thing under test.
-    */
-  def runCCStoreGate(spark: SparkSession, sfDir: String, nFiles: Int,
-                     statePartitions: Int, k: Int = 8, bands: Int = 4,
-                     minJaccard: Double = 0.2): DataFrame = {
-    val stage = stageDocs(spark, sfDir, nFiles)
-    val ns = spark.newSession()
-    ns.conf.set("spark.sql.shuffle.partitions", statePartitions.toString)
-    val store = graft.TempDirs.register(java.nio.file.Files
-      .createTempDirectory("graft-ccstore").toString)
-    val ckpt = graft.TempDirs.register(java.nio.file.Files
-      .createTempDirectory("graft-ccstore-ck").toString)
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("doc_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("text",
-        org.apache.spark.sql.types.StringType)))
-    val q = ns.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(stage)
-      .writeStream.outputMode("append")
-      .option("checkpointLocation", ckpt)
-      .foreachBatch(incrementalCCBatch(store, "text", k, bands,
-        minJaccard) _)
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    ccLabelFrame(standingCCLabels(ns, store))
-  }
-
-  /** Two-stream variant of [[runOrderedGateAppend]] — ordered staging +
-    * flush sentinels on BOTH sides, for outer stream-stream joins whose
-    * null-padded rows only emit once the watermark PROVES no partner
-    * can arrive.
-    */
-  def runOrderedGateAppend2(spark: SparkSession, sfDir: String,
-                            nFiles: Int, statePartitions: Int,
-                            sentinels: Int = 2)
-                           (build: (DataFrame, DataFrame) => DataFrame)
-      : DataFrame = {
-    val stage = stageEventsOrdered(spark, sfDir, nFiles, sentinels)
-    val ns = spark.newSession()
-    ns.conf.set("spark.sql.shuffle.partitions", statePartitions.toString)
-    runToAppendTable(
-      build(eventsStream(ns, stage), eventsStream(ns, stage)))
   }
 
   // ======== round-12: gate-FAMILY consolidation ========================
