@@ -12,6 +12,13 @@ object Sessions {
     * cluster deployment sets this to ~2-3× total cores or relies on AQE
     * coalescing), AQE on, and the nanos-as-long parquet flag required to
     * read the `events` fixture (see [[Tables.events]]).
+    *
+    * File scans: 128 KB splits spread a single-file fixture across the
+    * cores, while small files (a store's per-directory files) are packed
+    * into split-sized tasks, and store directories are listed on the
+    * driver instead of in a listing job. The codegen cache is sized to
+    * the engine's working set, so a repeated batch compiles no new
+    * classes. Each setting's comment gives its measured reason.
     */
   def local(cpus: String): SparkSession = {
     // in-memory imageio stream cache for the multimodal decode family:
@@ -37,6 +44,25 @@ object Sessions {
     // ONE task. 128 KB splits mirror the many-split reality of a real
     // deployment at fixture scale; a cluster keeps the 128 MB default.
     .config("spark.sql.files.maxPartitionBytes", "131072")
+    // Spark charges each file this "open cost" when it packs files into
+    // splits. The 4 MB default is larger than a whole 128 KB split, so
+    // no two files ever shared a task: the 64 one-file term-bucket
+    // directories of a lex postings store ran as 64 tasks per scan and
+    // per merged-head write (traced index-ingest batch: lexindex.merge
+    // 152 -> 32 tasks, 2.9 s -> 1.75 s). 4 KB restores Spark's default
+    // 1:32 ratio of open cost to split size.
+    .config("spark.sql.files.openCostInBytes", "4096")
+    // split size = min(maxPartitionBytes, max(openCost, bytes / this)).
+    // With 1, a single file splits exactly as without the line above:
+    // into 128 KB pieces, or whole when smaller. The default (cores)
+    // would cut any input under 512 KB into 4 pieces.
+    .config("spark.sql.files.minPartitionNum", "1")
+    // list a store's directories on the driver: above 32 leaf dirs
+    // (the default) Spark lists them in a Spark job, and a local
+    // session pays ~0.4 s for that job over the lex stores' 64 bucket
+    // directories, far more than listing them in place. The engine's
+    // widest store fans out to 64 directories.
+    .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "4096")
     .config("spark.sql.session.timeZone", "UTC")
     // plan-string metadata (FileScan Location/PushedFilters) truncates
     // at 100 chars by default — too short for the fingerprint-keyed

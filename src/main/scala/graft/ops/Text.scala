@@ -394,15 +394,7 @@ object Text {
         explode(array_distinct(cleanTokens(col("query_text"))))
           .as("term"))
     // stored postings carry the term-bucket PARTITION column
-    // (LexIndex.TermBuckets): the batch's distinct buckets are
-    // collected (a query batch is driver-sized by definition — the
-    // repo's collect() doctrine) and pushed as a STATIC partition
-    // filter, so the postings scan touches only the bucket directories
-    // the query terms hash to — scan cost ∝ buckets touched, not index
-    // size. (Dynamic partition pruning does not fire here: the query
-    // side carries no selective Filter node, so Catalyst's
-    // pruning-benefit heuristic rejects it — the explicit IN list is
-    // the guaranteed form.)
+    // (LexIndex.TermBuckets).
     val bucketed = tf.columns.contains("tbkt")
     // ONE driver collect of the batch's distinct (term, bucket) pairs
     // (a query batch is driver-sized by definition — the repo's

@@ -226,4 +226,30 @@ class Round15OpsSpec extends SparkSpec {
           "corpus")
     }
   }
+
+  test("store serving returns the same rows whether small store files " +
+      "share scan tasks (the session's packing) or each get their own " +
+      "task and a listing job (Spark's defaults)") {
+    val queries = Seq("q305_bm25_index_serve", "q299_ann_index_serve")
+    def serve(): Seq[Seq[org.apache.spark.sql.Row]] =
+      queries.map(q => SparkEntry.queries(q)(spark, dir).collect().toSeq)
+    val packed = serve()
+    val sparkDefaults = Seq(
+      "spark.sql.files.openCostInBytes" -> Some("4194304"),
+      "spark.sql.files.minPartitionNum" -> None,
+      "spark.sql.sources.parallelPartitionDiscovery.threshold" -> Some("32"))
+    val saved = sparkDefaults.map { case (k, _) =>
+      k -> spark.conf.getOption(k) }
+    def setAll(confs: Seq[(String, Option[String])]): Unit =
+      confs.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+    val unpacked =
+      try { setAll(sparkDefaults); serve() } finally setAll(saved)
+    queries.indices.foreach { i =>
+      assert(packed(i).nonEmpty, s"${queries(i)} must serve rows")
+      assert(packed(i) === unpacked(i), queries(i))
+    }
+  }
 }
