@@ -143,24 +143,9 @@ object AnnIndex {
     ensure(spark, dir, "base", Some(!Sim.frozenDeltaSplit),
       Sim.frozenBaseKey(dir), k, iters, m, codes)
 
-  private val ensureMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, java.util.concurrent.CompletableFuture[String]]
-
   private def ensure(spark: SparkSession, dir: String, tag: String,
                      trainFilter: Option[Column], memoKey: String,
                      k: Int, iters: Int, m: Int, codes: Int): String =
-    // single-flight per target within the JVM: Verify runs queries
-    // concurrently, and two threads building into the same pid-keyed
-    // staging dir corrupt each other mid-write (cross-JVM races are
-    // handled by the ATOMIC_MOVE publish below); the build runs
-    // outside any map bin lock (StoreCommit.singleFlight, r15 advice)
-    StoreCommit.singleFlight(ensureMemo,
-      root(dir, tag, k, iters, m, codes))(
-      build(spark, dir, tag, trainFilter, memoKey, k, iters, m, codes))
-
-  private def build(spark: SparkSession, dir: String, tag: String,
-                    trainFilter: Option[Column], memoKey: String,
-                    k: Int, iters: Int, m: Int, codes: Int): String =
     StoreCommit.ensure(root(dir, tag, k, iters, m, codes)) { staging =>
       val emb = graft.Tables.load(spark, dir, "embeddings")
       val trainSet = trainFilter.map(emb.where).getOrElse(emb)
@@ -262,6 +247,25 @@ object AnnIndex {
     StoreRead.parquet(spark, s"$p/probecents")
   }
 
+  /** Serve top-5 IVF-ADC retrieval for the fixture's ten query vectors
+    * (vec_id < 10, each probing from its own cell in `posts`) from a
+    * postings layout (vec_id, cell, code_0..3, …) and its probe
+    * geometry, with the `tag` store's codebooks at `k` cells —
+    * (q_id, c_id, rk). The one serve every dense lifecycle query and
+    * stream gate binds to its oracle; callers add their labels and
+    * ordering. */
+  def serveIvfAdc(spark: SparkSession, dir: String, posts: DataFrame,
+                  probeCents: DataFrame, tag: String, k: Int,
+                  probes: Int): DataFrame = {
+    val queries = graft.Tables.load(spark, dir, "embeddings")
+      .where(col("vec_id") < 10)
+      .join(posts.select(col("vec_id"), col("cell")), Seq("vec_id"))
+    Sim.topKIvfAdcCoded(queries,
+        posts.select((Seq(col("vec_id"), col("cell")) ++ codeCols(4)): _*),
+        probeCents, books(spark, dir, tag, k = k), k = 5, probes = probes)
+      .select(col("q_id"), col("c_id"), col("rk"))
+  }
+
   // ---- delta-append maintenance (the q292 lifecycle for the ANN
   // side) -------------------------------------------------------------
   // The snapshot store above is write-once per corpus; a REAL vector
@@ -284,10 +288,10 @@ object AnnIndex {
   // exactly the members versions 0..v hold, or a pre-append read
   // would rank probes against post-append information). Each segment
   // publishes atomically via StoreCommit; history stays queryable
-  // (time-travel); [[compactedPostings]] collapses the chain. Bound to
-  // q280's oracle string: summarizing the merged head must equal the
-  // in-memory frozen-append monitor — one contract, three engines
-  // (in-memory q280, streaming q282, stored-merge q293).
+  // (time-travel); [[compactedHeadPostings]] collapses the chain.
+  // Bound to q280's oracle string: summarizing the merged head must
+  // equal the in-memory frozen-append monitor — one contract, three
+  // engines (in-memory q280, streaming q282, stored-merge q293).
 
   /** History-format version, bumped independently of [[V]]: r16 "v4"
     * made segments DELTA-ONLY (postings hold one batch each; geometry
@@ -381,10 +385,20 @@ object AnnIndex {
   def appendVersionRoot(dir: String, version: Long, k: Int = 8,
                         iters: Int = 2, m: Int = 4,
                         codes: Int = 8, chain: String = ""): String =
+    histRoot("annidxhist", dir, k, iters, m, codes,
+      s"p${Chains.prefix(chainSegs(chain), version.toInt)}")
+
+  /** A history-format store root of `kind` for the quantizer params,
+    * ending in `suffix` (a segment-id prefix or an epoch tag). */
+  private def histRoot(kind: String, dir: String, k: Int, iters: Int,
+                       m: Int, codes: Int, suffix: String): String =
     sys.props("java.io.tmpdir") +
-      s"/graft-annidxhist-$HV-${slug(dir)}" +
-      s"-f${StoreCommit.fingerprint(dir)}-c$k-i$iters-m$m-k$codes" +
-      s"-p${Chains.prefix(chainSegs(chain), version.toInt)}"
+      s"/graft-$kind-$HV-${slug(dir)}" +
+      s"-f${StoreCommit.fingerprint(dir)}-c$k-i$iters-m$m-k$codes-$suffix"
+
+  /** The head-prefix suffix of `chain`'s compaction roots. */
+  private def headPrefix(chain: String): String =
+    s"p${Chains.prefix(chainSegs(chain), headVersion(chain).toInt)}"
 
   /** Assign + PQ-encode a batch under the STORED frozen "base"
     * quantizer — the per-ingest projection of index maintenance:
@@ -419,9 +433,6 @@ object AnnIndex {
       books(spark, dir, "base", k, iters, m, codes),
       "vec_id", "embedding", keep = Seq("cell", "sim_e9"))
 
-  private val appendMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, java.util.concurrent.CompletableFuture[String]]
-
   /** Ensure the postings-segment history for fixture `dir` and
     * `chain` (see [[chainSegs]]): an APPEND segment holds ONLY its
     * own batch — assigned and PQ-encoded under the frozen stored
@@ -443,36 +454,35 @@ object AnnIndex {
       .map { case ((seg, eff), v) =>
         val root = appendVersionRoot(dir, v.toLong, k, iters, m, codes,
           chain)
-        StoreCommit.singleFlight(appendMemo, root)(
-          StoreCommit.ensure(root) { staging =>
-            // ONE assignment feeds both artifacts: the postings (or
-            // tombstone ids) and the batch's geometry partials (the
-            // partials need the raw vectors the encoded postings drop)
-            val raw = assignRawUnderStored(spark, dir,
-                graft.Tables.load(spark, dir, "embeddings").where(eff),
-                k, iters, m, codes)
-              .localCheckpoint()
-            seg match {
-              case Append(_, _) =>
-                Sim.pqEncode(raw, books(spark, dir, "base", k, iters, m,
-                      codes), "vec_id", "embedding",
-                    keep = Seq("cell", "sim_e9"))
-                  .withColumn("is_delta", lit(v > 0))
-                  .write.mode("overwrite").parquet(s"$staging/postings")
-                Sim.cellCentroidPartials(raw, "cell", "embedding")
-                  .coalesce(1).write.mode("overwrite")
-                  .parquet(s"$staging/geoparts")
-              case Delete(_, _) =>
-                raw.select(col("vec_id"))
-                  .coalesce(1).write.mode("overwrite")
-                  .parquet(s"$staging/dels")
-                Sim.cellCentroidPartials(raw, "cell", "embedding")
-                  .select(col("cell"), col("pos"), (-col("s")).as("s"),
-                    (-col("cnt")).as("cnt"))
-                  .coalesce(1).write.mode("overwrite")
-                  .parquet(s"$staging/geoparts")
-            }
-          })
+        StoreCommit.ensure(root) { staging =>
+          // ONE assignment feeds both artifacts: the postings (or
+          // tombstone ids) and the batch's geometry partials (the
+          // partials need the raw vectors the encoded postings drop)
+          val raw = assignRawUnderStored(spark, dir,
+              graft.Tables.load(spark, dir, "embeddings").where(eff),
+              k, iters, m, codes)
+            .localCheckpoint()
+          seg match {
+            case Append(_, _) =>
+              Sim.pqEncode(raw, books(spark, dir, "base", k, iters, m,
+                    codes), "vec_id", "embedding",
+                  keep = Seq("cell", "sim_e9"))
+                .withColumn("is_delta", lit(v > 0))
+                .write.mode("overwrite").parquet(s"$staging/postings")
+              Sim.cellCentroidPartials(raw, "cell", "embedding")
+                .coalesce(1).write.mode("overwrite")
+                .parquet(s"$staging/geoparts")
+            case Delete(_, _) =>
+              raw.select(col("vec_id"))
+                .coalesce(1).write.mode("overwrite")
+                .parquet(s"$staging/dels")
+              Sim.cellCentroidPartials(raw, "cell", "embedding")
+                .select(col("cell"), col("pos"), (-col("s")).as("s"),
+                  (-col("cnt")).as("cnt"))
+                .coalesce(1).write.mode("overwrite")
+                .parquet(s"$staging/geoparts")
+          }
+        }
       }
 
   private def historyRoots(spark: SparkSession, dir: String,
@@ -553,40 +563,6 @@ object AnnIndex {
     * the same entities from both arms of the retrieval stack. */
   val deleteSplit: Column = col("vec_id") % 7 === 3
 
-  /** The head tombstone segment's store root — the "md" chain's last
-    * segment ([[appendVersionRoot]] prefix `std.d.del7`). */
-  def deleteRoot(dir: String, k: Int = 8, iters: Int = 2, m: Int = 4,
-                 codes: Int = 8): String =
-    appendVersionRoot(dir, 2L, k, iters, m, codes, chain = "md")
-
-  /** Publish the head tombstone segment — [[ensureAppendHistory]] of
-    * the "md" chain (the two append segments are the default chain's
-    * bytes, prefix-shared). Returns the tombstone segment's root. */
-  def ensureDeleteTombstones(spark: SparkSession, dir: String,
-                             k: Int = 8, iters: Int = 2, m: Int = 4,
-                             codes: Int = 8): String =
-    ensureAppendHistory(spark, dir, k, iters, m, codes,
-      chain = "md").last
-
-  /** The head's postings AFTER the tombstone delete — the "md"
-    * chain's head state: the segment fold masked by a broadcast
-    * anti-join on the tombstone ids (batch-sized by definition). */
-  def postingsAfterDelete(spark: SparkSession, dir: String, k: Int = 8,
-                          iters: Int = 2, m: Int = 4,
-                          codes: Int = 8): DataFrame =
-    postingsAsOf(spark, dir, version = 2L, k, iters, m, codes,
-      chain = "md")
-
-  /** Probe geometry AFTER the delete: the head's partials folded with
-    * the tombstone segment's negated partials — bit-identical to a
-    * one-pass [[Sim.cellCentroids]] over the survivors, emptied cells
-    * dropped. */
-  def probeCentsAfterDelete(spark: SparkSession, dir: String,
-                            k: Int = 8, iters: Int = 2, m: Int = 4,
-                            codes: Int = 8): DataFrame =
-    probeCentsAsOf(spark, dir, version = 2L, k, iters, m, codes,
-      chain = "md")
-
   /** The head version of a chain (the last segment's index). */
   def headVersion(chain: String = ""): Long =
     chainSegs(chain).length - 1L
@@ -603,29 +579,15 @@ object AnnIndex {
                             k: Int = 8, iters: Int = 2, m: Int = 4,
                             codes: Int = 8,
                             chain: String = ""): DataFrame = {
-    val segs = chainSegs(chain)
-    val root = sys.props("java.io.tmpdir") +
-      s"/graft-annidxcompact-$HV-${slug(dir)}" +
-      s"-f${StoreCommit.fingerprint(dir)}-c$k-i$iters-m$m-k$codes" +
-      s"-p${Chains.prefix(segs, segs.length - 1)}"
-    val path = StoreCommit.singleFlight(appendMemo, root)(
-      StoreCommit.ensure(root) { staging =>
-        postingsAsOf(spark, dir, headVersion(chain), k, iters, m,
-            codes, chain)
-          .coalesce(1)
-          .write.mode("overwrite").parquet(s"$staging/postings")
-      })
+    val path = StoreCommit.ensure(histRoot("annidxcompact", dir, k,
+      iters, m, codes, headPrefix(chain))) { staging =>
+      postingsAsOf(spark, dir, headVersion(chain), k, iters, m, codes,
+          chain)
+        .coalesce(1)
+        .write.mode("overwrite").parquet(s"$staging/postings")
+    }
     StoreRead.parquet(spark, s"$path/postings")
   }
-
-  /** Delete-compaction over the "md" chain's head —
-    * [[compactedHeadPostings]] at the tombstoned head (q318). */
-  def compactedPostingsAfterDelete(spark: SparkSession, dir: String,
-                                   k: Int = 8, iters: Int = 2,
-                                   m: Int = 4,
-                                   codes: Int = 8): DataFrame =
-    compactedHeadPostings(spark, dir, k, iters, m, codes,
-      chain = "md")
 
   /** Ensure the TIERED (minor) compaction of an all-append chain —
     * the segment-count arm of q324's policy executed the LSM way
@@ -651,25 +613,21 @@ object AnnIndex {
         "compactedHeadPostings (the reclaim)")
     val roots = ensureAppendHistory(spark, dir, k, iters, m, codes,
       chain)
-    val root = sys.props("java.io.tmpdir") +
-      s"/graft-annidxtier-$HV-${slug(dir)}" +
-      s"-f${StoreCommit.fingerprint(dir)}-c$k-i$iters-m$m-k$codes" +
-      s"-p${Chains.prefix(segs, segs.length - 1)}"
-    val path = StoreCommit.singleFlight(appendMemo, root)(
-      StoreCommit.ensure(root) { staging =>
-        val tails = roots.drop(1)
-        tails.map(r => StoreRead.parquet(spark, s"$r/postings"))
-          .reduce(_.unionByName(_))
-          .coalesce(1)
-          .write.mode("overwrite").parquet(s"$staging/postings")
-        tails.map(r => StoreRead.parquet(spark, s"$r/geoparts"))
-          .reduce(_.unionByName(_))
-          .groupBy("cell", "pos")
-          .agg(sum(col("s")).cast("decimal(37,10)").as("s"),
-            sum(col("cnt")).as("cnt"))
-          .coalesce(1)
-          .write.mode("overwrite").parquet(s"$staging/geoparts")
-      })
+    val path = StoreCommit.ensure(histRoot("annidxtier", dir, k, iters,
+      m, codes, headPrefix(chain))) { staging =>
+      val tails = roots.drop(1)
+      tails.map(r => StoreRead.parquet(spark, s"$r/postings"))
+        .reduce(_.unionByName(_))
+        .coalesce(1)
+        .write.mode("overwrite").parquet(s"$staging/postings")
+      tails.map(r => StoreRead.parquet(spark, s"$r/geoparts"))
+        .reduce(_.unionByName(_))
+        .groupBy("cell", "pos")
+        .agg(sum(col("s")).cast("decimal(37,10)").as("s"),
+          sum(col("cnt")).as("cnt"))
+        .coalesce(1)
+        .write.mode("overwrite").parquet(s"$staging/geoparts")
+    }
     (roots.head, path)
   }
 
@@ -720,9 +678,7 @@ object AnnIndex {
   /** The rotation record's store root (epoch 1 at resized k). */
   def retrainEpochRoot(dir: String, k: Int, iters: Int = 2, m: Int = 4,
                        codes: Int = 8): String =
-    sys.props("java.io.tmpdir") +
-      s"/graft-annidxepoch-$HV-${slug(dir)}" +
-      s"-f${StoreCommit.fingerprint(dir)}-c$k-i$iters-m$m-k$codes-e1"
+    histRoot("annidxepoch", dir, k, iters, m, codes, "e1")
 
   /** EXECUTE a measured retrain decision: if `retrain`, build/publish
     * the resized full-corpus snapshot store (idempotent — the standard
@@ -738,15 +694,14 @@ object AnnIndex {
     if (!retrain) 0
     else {
       val store = ensureFull(spark, dir, kResized, iters, m, codes)
-      val root = retrainEpochRoot(dir, kResized, iters, m, codes)
-      StoreCommit.singleFlight(appendMemo, root)(
-        StoreCommit.ensure(root) { staging =>
-          import spark.implicits._
-          Seq((1L, kResized, "full", store))
-            .toDF("epoch", "k", "tag", "store_root")
-            .coalesce(1).write.mode("overwrite")
-            .parquet(s"$staging/record")
-        })
+      StoreCommit.ensure(retrainEpochRoot(dir, kResized, iters, m,
+        codes)) { staging =>
+        import spark.implicits._
+        Seq((1L, kResized, "full", store))
+          .toDF("epoch", "k", "tag", "store_root")
+          .coalesce(1).write.mode("overwrite")
+          .parquet(s"$staging/record")
+      }
       1
     }
 
@@ -760,17 +715,14 @@ object AnnIndex {
   private def ensureEpochGeoparts(spark: SparkSession, dir: String,
                                   k: Int, iters: Int, m: Int,
                                   nCodes: Int): String =
-    StoreCommit.singleFlight(appendMemo,
-      retrainEpochRoot(dir, k, iters, m, nCodes) + "-geo")(
-      StoreCommit.ensure(
-        retrainEpochRoot(dir, k, iters, m, nCodes) + "-geo") {
-        staging =>
-          Sim.cellCentroidPartials(
-              cells(spark, dir, "full", k, iters, m, nCodes), "cell",
-              "embedding")
-            .coalesce(1).write.mode("overwrite")
-            .parquet(s"$staging/geoparts")
-      })
+    StoreCommit.ensure(
+      retrainEpochRoot(dir, k, iters, m, nCodes) + "-geo") { staging =>
+      Sim.cellCentroidPartials(
+          cells(spark, dir, "full", k, iters, m, nCodes), "cell",
+          "embedding")
+        .coalesce(1).write.mode("overwrite")
+        .parquet(s"$staging/geoparts")
+    }
 
   /** TAKEDOWN on a ROTATED epoch (q331 — the lifecycle ops COMPOSE):
     * after [[rotateIfRetrain]] publishes the resized epoch-1 store,
@@ -792,22 +744,19 @@ object AnnIndex {
                          iters: Int = 2, m: Int = 4,
                          nCodes: Int = 8): (DataFrame, DataFrame) = {
     val geo = ensureEpochGeoparts(spark, dir, k, iters, m, nCodes)
-    val root = sys.props("java.io.tmpdir") +
-      s"/graft-annepochdel-$HV-${slug(dir)}" +
-      s"-f${StoreCommit.fingerprint(dir)}-c$k-i$iters-m$m-k$nCodes-v2"
-    val path = StoreCommit.singleFlight(appendMemo, root)(
-      StoreCommit.ensure(root) { staging =>
-        val doomed = cells(spark, dir, "full", k, iters, m, nCodes)
-          .where(deleteSplit)
-        doomed.select(col("vec_id"))
-          .coalesce(1).write.mode("overwrite")
-          .parquet(s"$staging/dels")
-        Sim.cellCentroidPartials(doomed, "cell", "embedding")
-          .select(col("cell"), col("pos"), (-col("s")).as("s"),
-            (-col("cnt")).as("cnt"))
-          .coalesce(1).write.mode("overwrite")
-          .parquet(s"$staging/negparts")
-      })
+    val path = StoreCommit.ensure(histRoot("annepochdel", dir, k, iters,
+      m, nCodes, "v2")) { staging =>
+      val doomed = cells(spark, dir, "full", k, iters, m, nCodes)
+        .where(deleteSplit)
+      doomed.select(col("vec_id"))
+        .coalesce(1).write.mode("overwrite")
+        .parquet(s"$staging/dels")
+      Sim.cellCentroidPartials(doomed, "cell", "embedding")
+        .select(col("cell"), col("pos"), (-col("s")).as("s"),
+          (-col("cnt")).as("cnt"))
+        .coalesce(1).write.mode("overwrite")
+        .parquet(s"$staging/negparts")
+    }
     val dels = broadcast(StoreRead.parquet(spark, s"$path/dels"))
     (codes(spark, dir, "full", k, iters, m, nCodes)
       .join(dels, Seq("vec_id"), "left_anti"),
@@ -815,19 +764,4 @@ object AnnIndex {
         StoreRead.parquet(spark, s"$geo/geoparts")
           .unionByName(StoreRead.parquet(spark, s"$path/negparts"))))
   }
-
-  /** COMPACTION of the append history (q302 — the lifecycle's last
-    * step): rewrite the merged head's segment fold into one fresh,
-    * atomically-published snapshot store. Appends accrue per-segment
-    * file fragmentation (serving v_n unions n parquet directories);
-    * compaction folds the chain into a single coalesced postings file
-    * and the version history stays readable for audits — the
-    * content is row-for-row the head's fold, so serving from the
-    * compacted store MUST equal serving from the history head (q302
-    * binds q299's oracle string: one contract, two physical layouts).
-    */
-  def compactedPostings(spark: SparkSession, dir: String, k: Int = 8,
-                        iters: Int = 2, m: Int = 4,
-                        codes: Int = 8): DataFrame =
-    compactedHeadPostings(spark, dir, k, iters, m, codes, chain = "")
 }

@@ -67,40 +67,20 @@ object Artifacts {
     p
   }
 
-  /** Build-once / read-everywhere. First caller installs a future and
-    * pays the build + parquet write; concurrent and later callers join
-    * the future and share the ONE read-back frame. A failed build
-    * removes its future so a later call can retry (and rethrows).
+  /** Build-once / read-everywhere ([[StoreCommit.singleFlight]]): the
+    * first caller pays the build + parquet write; concurrent and later
+    * callers share the ONE read-back frame. A failed build can be
+    * retried.
     */
-  private def memo(key: String)(build: => DataFrame): DataFrame = {
-    val fresh = new CompletableFuture[DataFrame]()
-    val prior = cache.putIfAbsent(key, fresh)
-    // same unwrap as StoreCommit.singleFlight (r16 advice): losers see
-    // the winner's original exception, not a CompletionException shell
-    if (prior != null)
-      try prior.join()
-      catch {
-        case e: java.util.concurrent.CompletionException
-            if e.getCause != null => throw e.getCause
-      }
-    else {
-      try {
-        val df0 = build
-        val path = root.resolve(
-          java.security.MessageDigest.getInstance("MD5").digest(key.getBytes("UTF-8"))
-            .map("%02x".format(_)).mkString).toString
-        df0.write.mode("overwrite").parquet(path)
-        val df = StoreRead.parquet(df0.sparkSession, path)
-        fresh.complete(df)
-        df
-      } catch {
-        case e: Throwable =>
-          cache.remove(key, fresh)
-          fresh.completeExceptionally(e)
-          throw e
-      }
+  private def memo(key: String)(build: => DataFrame): DataFrame =
+    StoreCommit.singleFlight(cache, key) {
+      val df0 = build
+      val path = root.resolve(
+        java.security.MessageDigest.getInstance("MD5").digest(key.getBytes("UTF-8"))
+          .map("%02x".format(_)).mkString).toString
+      df0.write.mode("overwrite").parquet(path)
+      StoreRead.parquet(df0.sparkSession, path)
     }
-  }
 
   private def keyOf(spark: SparkSession, sfDir: String, what: String,
                     params: String): String =

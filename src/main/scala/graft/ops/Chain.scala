@@ -1,7 +1,7 @@
 package graft.ops
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.functions.{col, expr, lit}
 
 /** The segment ALGEBRA of a maintained index chain, shared by the two
   * physical stores ([[AnnIndex]], [[LexIndex]]) — round 17's
@@ -84,4 +84,29 @@ private[graft] object Chains {
     * that lets chains share common prefixes' published bytes. */
   def prefix(segs: Seq[Segment], version: Int): String =
     segs.take(version + 1).map(_.id).mkString(".")
+
+  /** The compaction policy's reclaim threshold: compact once tombstones
+    * are ≥ 1/8 of the chain's entities (masked reads scan ≥ 12.5 % dead
+    * rows), as a share in millionths. */
+  val CompactTombShareE6 = 125000
+
+  /** The policy's fragmentation threshold: compact once a chain holds
+    * this many segments (per-read fold fan-in). */
+  val CompactSegments = 4
+
+  /** The compaction policy over a `chainStatsFrame` (chain, n_segments,
+    * n_live, n_tomb): adds `tomb_share_e6` (integer millionths) and
+    * `compact` — the one definition q324 reports and q326–q329 and the
+    * auto-compacting stream gates execute. */
+  def compactionPolicy(stats: DataFrame): DataFrame =
+    stats
+      .withColumn("tomb_share_e6",
+        expr("(n_tomb * 1000000) div (n_live + n_tomb)"))
+      .withColumn("compact", col("tomb_share_e6") >= CompactTombShareE6 ||
+        col("n_segments") >= CompactSegments)
+
+  /** [[compactionPolicy]] collected to a chain → compact? map. */
+  def compactDecisions(stats: DataFrame): Map[String, Boolean] =
+    compactionPolicy(stats).select("chain", "compact").collect()
+      .map(r => r.getString(0) -> r.getBoolean(1)).toMap
 }

@@ -43,57 +43,45 @@ object LexIndex {
       s"/graft-lexindex-$V-${StoreCommit.slug(dir)}" +
       s"-f${StoreCommit.fingerprint(dir)}"
 
-  private val ensureMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, java.util.concurrent.CompletableFuture[String]]
+  /** The four index frames (tf, dl, df, stats). */
+  type Frames = (DataFrame, DataFrame, DataFrame, DataFrame)
 
   private def ensure(spark: SparkSession, dir: String): String =
-    StoreCommit.singleFlight(ensureMemo, root(dir))(
-      StoreCommit.ensure(root(dir)) { staging =>
-        val docs = graft.Tables.load(spark, dir, "documents")
-        val terms = docs.select(col("doc_id").as("id"),
-          explode(Text.cleanTokens(col("text"))).as("term"))
-        val tf = terms.groupBy("id", "term").agg(count(lit(1)).as("tf"))
-        // postings land in term-hash bucket DIRECTORIES: a query batch
-        // joining on (term, tbkt) lets dynamic partition pruning skip
-        // every bucket its terms don't hash to — the term-directory of
-        // an inverted index, expressed as partition pruning
-        tf.withColumn("tbkt", pmod(hash(col("term")), lit(TermBuckets)))
-          .repartition(col("tbkt"))
-          .write.mode("overwrite").partitionBy("tbkt")
-          .parquet(s"$staging/tf")
-        terms.groupBy("id").agg(count(lit(1)).as("dl"))
-          .write.mode("overwrite").parquet(s"$staging/dl")
-        tf.groupBy("term").agg(count(lit(1)).as("df"))
-          .write.mode("overwrite").parquet(s"$staging/df")
-        terms.agg(count(lit(1)).as("n_terms"))
-          .crossJoin(docs.agg(count(lit(1)).as("n_docs")))
-          .coalesce(1).write.mode("overwrite")
-          .parquet(s"$staging/stats")
-      })
+    StoreCommit.ensure(root(dir))(staging => writeFrames(staging,
+      buildFrames(graft.Tables.load(spark, dir, "documents"))))
 
   /** The four stored index frames (tf, dl, df, stats) — plain parquet
     * reads, nothing pinned in executor memory. */
   def frames(spark: SparkSession, dir: String)
-      : (DataFrame, DataFrame, DataFrame, DataFrame) = {
-    val p = ensure(spark, dir)
-    (StoreRead.parquet(spark, s"$p/tf"), StoreRead.parquet(spark, s"$p/dl"),
-      StoreRead.parquet(spark, s"$p/df"), StoreRead.parquet(spark, s"$p/stats"))
-  }
+      : (DataFrame, DataFrame, DataFrame, DataFrame) =
+    readFrames(spark, ensure(spark, dir))
 
-  /** BM25 retrieval served from the store — the production serving
-    * path: query batch in, ranked postings out, zero corpus
-    * tokenization at query time. */
-  def bm25Retrieve(spark: SparkSession, dir: String,
-                   queries: DataFrame, k: Int,
-                   excludeSelf: Boolean = false): DataFrame = {
-    val (tf, dl, df, stats) = frames(spark, dir)
-    Text.bm25RetrieveStored(queries, tf, dl, df, stats, k, excludeSelf)
+  /** q176's keyword batch: the reference's keyword search
+    * (etl_pipeline.py:44-51) as four BM25 queries. */
+  val KeywordQueries: Seq[(String, String)] = Seq(
+    ("kw_cust", "customer order value"),
+    ("kw_join", "join merge hash"),
+    ("kw_scan", "spark scan filter"),
+    ("kw_win", "window batch sort"))
+
+  /** Serve [[KeywordQueries]] at k = 5 from index frames — (query_id,
+    * doc_id, n_matched, score, rk). The one serve every lexical
+    * lifecycle query and stream gate binds to q176's oracle string;
+    * callers add their labels and ordering. */
+  def serveKeywords(spark: SparkSession, frames: Frames): DataFrame = {
+    import spark.implicits._
+    val (tf, dl, df, stats) = frames
+    Text.bm25RetrieveStored(KeywordQueries.toDF("query_id", "query_text"),
+        tf, dl, df, stats, k = 5)
+      .select(col("query_id"), col("id").as("doc_id"), col("n_matched"),
+        col("score"), col("rk"))
   }
 
   /** Build the four index frames from a document frame WITHOUT
-    * persisting — the shard-local build step of incremental index
-    * maintenance ([[merge]] combines shards/deltas). Identical
-    * aggregates to the store writer. */
+    * persisting — the one (terms → tf, dl, df, stats) definition: the
+    * store writers, the shard-local build step of incremental index
+    * maintenance ([[merge]] combines shards/deltas) and the on-the-fly
+    * BM25 forms all derive their frames here. */
   def buildFrames(docs: DataFrame, idCol: String = "doc_id",
                   textCol: String = "text")
       : (DataFrame, DataFrame, DataFrame, DataFrame) = {
@@ -176,7 +164,7 @@ object LexIndex {
   // chain (r16 advice), and the delete chain "md" reuses the ENTIRE
   // default history, adding one tombstone segment. Every version of a
   // mixed append→delete→append chain is an as-of-readable state (r16
-  // verdict ask #3). [[compactedFrames]] folds a chain into one fresh
+  // verdict ask #3). [[compactedHeadFrames]] folds a chain into one fresh
   // single-segment snapshot — serving-invariant because every frame
   // is a sum of per-document counts (merge ≡ build(A∪B), the q292
   // property; deletes are exact integer subtraction of per-document
@@ -269,21 +257,23 @@ object LexIndex {
     * everything before the segment, not just its own slice. */
   def versionRoot(dir: String, version: Long,
                   chain: String = ""): String =
+    histRoot("lexidxhist", dir, version, chain)
+
+  /** A history-format store root of `kind` keyed by the segment-id
+    * prefix up to `version` of `chain`. */
+  private def histRoot(kind: String, dir: String, version: Long,
+                       chain: String): String =
     sys.props("java.io.tmpdir") +
-      s"/graft-lexidxhist-$HV-${StoreCommit.slug(dir)}" +
+      s"/graft-$kind-$HV-${StoreCommit.slug(dir)}" +
       s"-f${StoreCommit.fingerprint(dir)}" +
       s"-p${Chains.prefix(chainSegs(chain), version.toInt)}"
 
-  private val histMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, java.util.concurrent.CompletableFuture[String]]
-
-  /** Persist one segment's four frames under `staging` — the same
-    * layout as the snapshot store ([[ensure]]), including the
-    * term-bucket directory partitioning on tf, so every consumer gets
-    * the pruned postings scan regardless of which store it reads. */
-  private def writeFrames(staging: String,
-                          frames: (DataFrame, DataFrame, DataFrame,
-                            DataFrame)): Unit = {
+  /** Persist four index frames under `staging` — the one store layout
+    * the snapshot ([[ensure]]), every history segment and every
+    * compaction share, including the term-bucket directory
+    * partitioning on tf, so every consumer gets the pruned postings
+    * scan regardless of which store it reads. */
+  private def writeFrames(staging: String, frames: Frames): Unit = {
     val (tf, dl, df, stats) = frames
     tf.withColumn("tbkt", pmod(hash(col("term")), lit(TermBuckets)))
       .repartition(col("tbkt"))
@@ -295,8 +285,7 @@ object LexIndex {
       .parquet(s"$staging/stats")
   }
 
-  private def readFrames(spark: SparkSession, p: String)
-      : (DataFrame, DataFrame, DataFrame, DataFrame) =
+  private def readFrames(spark: SparkSession, p: String): Frames =
     (StoreRead.parquet(spark, s"$p/tf"), StoreRead.parquet(spark, s"$p/dl"),
       StoreRead.parquet(spark, s"$p/df"), StoreRead.parquet(spark, s"$p/stats"))
 
@@ -320,69 +309,68 @@ object LexIndex {
     Chains.effective(chainSegs(chain)).zipWithIndex
       .foldLeft(Seq.empty[String]) { case (prev, ((seg, eff), v)) =>
         val root = versionRoot(dir, v.toLong, chain)
-        prev :+ StoreCommit.singleFlight(histMemo, root)(
-          StoreCommit.ensure(root) { staging =>
-            seg match {
-              case Append(_, _) =>
-                val fr = buildFrames(
-                  graft.Tables.load(spark, dir, "documents").where(eff))
-                writeFrames(staging, fr)
-                val (dfc, stc) =
-                  if (prev.isEmpty) (fr._3, fr._4)
-                  else {
-                    // fold THIS batch's counts into the previous
-                    // segment's PUBLISHED cumulative — an O(vocab)
-                    // read + write, so the publish cost stays
-                    // ∝ batch + |vocab|
-                    val pdf = StoreRead.parquet(spark, s"${prev.last}/dfcum")
-                    // StoreRead for the schema memo (r17 advice: this
-                    // was the one raw read left next to its converted
-                    // twins — same fingerprinted-root safety argument)
-                    val pst = StoreRead.parquet(spark,
-                      s"${prev.last}/statscum")
-                    (pdf.unionByName(fr._3).groupBy("term")
-                      .agg(sum(col("df")).as("df")),
-                      pst.unionByName(fr._4)
-                        .agg(sum(col("n_terms")).as("n_terms"),
-                          sum(col("n_docs")).as("n_docs")))
-                  }
-                dfc.coalesce(1).write.mode("overwrite")
-                  .parquet(s"$staging/dfcum")
-                stc.coalesce(1).write.mode("overwrite")
-                  .parquet(s"$staging/statscum")
-              case Delete(_, _) =>
-                // tombstone segment: the captured ids (∝ batch) + the
-                // cum AFTER the delete — prev cum − the doomed docs'
-                // own counts, zero-df terms dropped (exact integer
-                // subtraction; all four frames are sums of
-                // per-document counts, so this is [[merge]]'s mirror
-                // image). A chain cannot start with a delete.
-                require(prev.nonEmpty,
-                  s"chain '$chain' starts with a delete segment")
-                val deleted = graft.Tables.load(spark, dir, "documents")
-                  .where(eff)
-                val (_, _, dfNeg, stNeg) = buildFrames(deleted)
-                deleted.select(col("doc_id").as("id"))
-                  .coalesce(1).write.mode("overwrite")
-                  .parquet(s"$staging/dels")
-                StoreRead.parquet(spark, s"${prev.last}/dfcum")
-                  .join(dfNeg.withColumnRenamed("df", "dfneg"),
-                    Seq("term"), "left")
-                  .select(col("term"),
-                    (col("df") - coalesce(col("dfneg"), lit(0L)))
-                      .as("df"))
-                  .where(col("df") > 0)
-                  .coalesce(1).write.mode("overwrite")
-                  .parquet(s"$staging/dfcum")
-                StoreRead.parquet(spark, s"${prev.last}/statscum")
-                  .crossJoin(stNeg.select(col("n_terms").as("tneg"),
-                    col("n_docs").as("dneg")))
-                  .select((col("n_terms") - col("tneg")).as("n_terms"),
-                    (col("n_docs") - col("dneg")).as("n_docs"))
-                  .coalesce(1).write.mode("overwrite")
-                  .parquet(s"$staging/statscum")
-            }
-          })
+        prev :+ StoreCommit.ensure(root) { staging =>
+          seg match {
+            case Append(_, _) =>
+              val fr = buildFrames(
+                graft.Tables.load(spark, dir, "documents").where(eff))
+              writeFrames(staging, fr)
+              val (dfc, stc) =
+                if (prev.isEmpty) (fr._3, fr._4)
+                else {
+                  // fold THIS batch's counts into the previous
+                  // segment's PUBLISHED cumulative — an O(vocab)
+                  // read + write, so the publish cost stays
+                  // ∝ batch + |vocab|
+                  val pdf = StoreRead.parquet(spark, s"${prev.last}/dfcum")
+                  // StoreRead for the schema memo (r17 advice: this
+                  // was the one raw read left next to its converted
+                  // twins — same fingerprinted-root safety argument)
+                  val pst = StoreRead.parquet(spark,
+                    s"${prev.last}/statscum")
+                  (pdf.unionByName(fr._3).groupBy("term")
+                    .agg(sum(col("df")).as("df")),
+                    pst.unionByName(fr._4)
+                      .agg(sum(col("n_terms")).as("n_terms"),
+                        sum(col("n_docs")).as("n_docs")))
+                }
+              dfc.coalesce(1).write.mode("overwrite")
+                .parquet(s"$staging/dfcum")
+              stc.coalesce(1).write.mode("overwrite")
+                .parquet(s"$staging/statscum")
+            case Delete(_, _) =>
+              // tombstone segment: the captured ids (∝ batch) + the
+              // cum AFTER the delete — prev cum − the doomed docs'
+              // own counts, zero-df terms dropped (exact integer
+              // subtraction; all four frames are sums of
+              // per-document counts, so this is [[merge]]'s mirror
+              // image). A chain cannot start with a delete.
+              require(prev.nonEmpty,
+                s"chain '$chain' starts with a delete segment")
+              val deleted = graft.Tables.load(spark, dir, "documents")
+                .where(eff)
+              val (_, _, dfNeg, stNeg) = buildFrames(deleted)
+              deleted.select(col("doc_id").as("id"))
+                .coalesce(1).write.mode("overwrite")
+                .parquet(s"$staging/dels")
+              StoreRead.parquet(spark, s"${prev.last}/dfcum")
+                .join(dfNeg.withColumnRenamed("df", "dfneg"),
+                  Seq("term"), "left")
+                .select(col("term"),
+                  (col("df") - coalesce(col("dfneg"), lit(0L)))
+                    .as("df"))
+                .where(col("df") > 0)
+                .coalesce(1).write.mode("overwrite")
+                .parquet(s"$staging/dfcum")
+              StoreRead.parquet(spark, s"${prev.last}/statscum")
+                .crossJoin(stNeg.select(col("n_terms").as("tneg"),
+                  col("n_docs").as("dneg")))
+                .select((col("n_terms") - col("tneg")).as("n_terms"),
+                  (col("n_docs") - col("dneg")).as("n_docs"))
+                .coalesce(1).write.mode("overwrite")
+                .parquet(s"$staging/statscum")
+          }
+        }
       }
 
   /** TIME-TRAVEL read of the maintained index: the four frames AS OF
@@ -400,8 +388,7 @@ object LexIndex {
     * aggregation on every serving query).
     */
   def framesAsOf(spark: SparkSession, dir: String, version: Long,
-                 chain: String = "")
-      : (DataFrame, DataFrame, DataFrame, DataFrame) = {
+                 chain: String = ""): Frames = {
     val roots = ensureAppendHistory(spark, dir, chain)
     require(version >= 0L && version < roots.length,
       s"chain '$chain' holds segments 0..${roots.length - 1}" +
@@ -449,28 +436,6 @@ object LexIndex {
     * exercises every segment of the history it masks. */
   val deleteSplit: Column = col("doc_id") % 7 === 3
 
-  /** The head tombstone segment's store root — the "md" chain's last
-    * segment ([[versionRoot]] prefix `std.d.del7`). */
-  def deleteRoot(dir: String): String = versionRoot(dir, 2L, "md")
-
-  /** Publish the head tombstone segment — [[ensureAppendHistory]] of
-    * the "md" chain; the two append segments are the default chain's
-    * published bytes (prefix-shared), so only the tombstone segment
-    * is new. Returns its root. */
-  def ensureDeleteTombstones(spark: SparkSession, dir: String)
-      : String =
-    ensureAppendHistory(spark, dir, chain = "md").last
-
-  /** The four frames AFTER the tombstone delete — the serving read:
-    * the "md" chain's head state ([[framesAsOf]] masks tf/dl with the
-    * broadcast tombstone ids; df/stats are the tombstone segment's
-    * pre-folded cums, plain scans). Bit-equal to indexing the
-    * surviving corpus from scratch, by the count-sum algebra.
-    */
-  def framesAfterDelete(spark: SparkSession, dir: String)
-      : (DataFrame, DataFrame, DataFrame, DataFrame) =
-    framesAsOf(spark, dir, 2L, chain = "md")
-
   /** The head version of a chain (the last segment's index). */
   def headVersion(chain: String = ""): Long =
     chainSegs(chain).length - 1L
@@ -486,28 +451,17 @@ object LexIndex {
     * the POLICY-routed serve (q326) switch layouts without changing
     * answers. */
   def compactedHeadFrames(spark: SparkSession, dir: String,
-                          chain: String = "")
-      : (DataFrame, DataFrame, DataFrame, DataFrame) = {
-    val segs = chainSegs(chain)
-    val root = sys.props("java.io.tmpdir") +
-      s"/graft-lexidxcompact-$HV-${StoreCommit.slug(dir)}" +
-      s"-f${StoreCommit.fingerprint(dir)}" +
-      s"-p${Chains.prefix(segs, segs.length - 1)}"
-    val p = StoreCommit.singleFlight(histMemo, root)(
-      StoreCommit.ensure(root) { staging =>
+                          chain: String = ""): Frames = {
+    val p = StoreCommit.ensure(
+      histRoot("lexidxcompact", dir, headVersion(chain), chain)) {
+      staging =>
         val (tf, dl, df, stats) =
           framesAsOf(spark, dir, headVersion(chain), chain)
         writeFrames(staging,
           (tf.drop("tbkt"), dl.coalesce(1), df.coalesce(1), stats))
-      })
+    }
     readFrames(spark, p)
   }
-
-  /** Delete-compaction over the "md" chain's head —
-    * [[compactedHeadFrames]] at the tombstoned head (q317). */
-  def compactedFramesAfterDelete(spark: SparkSession, dir: String)
-      : (DataFrame, DataFrame, DataFrame, DataFrame) =
-    compactedHeadFrames(spark, dir, chain = "md")
 
   /** TIERED (minor) compaction of an all-append chain's head — the
     * segment-count arm of q324's policy EXECUTED the way a 100 TB
@@ -532,20 +486,16 @@ object LexIndex {
     * identical to the N-segment head fold ([[framesAsOf]]) by append
     * disjointness — df/stats from the copied head pre-folds. */
   def tieredHeadFrames(spark: SparkSession, dir: String,
-                       chain: String = "c4")
-      : (DataFrame, DataFrame, DataFrame, DataFrame) = {
+                       chain: String = "c4"): Frames = {
     val segs = chainSegs(chain)
     require(segs.forall(_.isInstanceOf[Append]),
       s"tiered merge is the all-append arm of compaction; chain " +
         s"'$chain' holds delete segments — use compactedHeadFrames " +
         "(the reclaim)")
     val roots = ensureAppendHistory(spark, dir, chain)
-    val root = sys.props("java.io.tmpdir") +
-      s"/graft-lexidxtier-$HV-${StoreCommit.slug(dir)}" +
-      s"-f${StoreCommit.fingerprint(dir)}" +
-      s"-p${Chains.prefix(segs, segs.length - 1)}"
-    val p = StoreCommit.singleFlight(histMemo, root)(
-      StoreCommit.ensure(root) { staging =>
+    val p = StoreCommit.ensure(
+      histRoot("lexidxtier", dir, headVersion(chain), chain)) {
+      staging =>
         val tails = roots.drop(1)
         val tf = tails.map(r => StoreRead.parquet(spark, s"$r/tf"))
           .reduce(_.unionByName(_))
@@ -564,7 +514,7 @@ object LexIndex {
           StoreRead.parquet(spark, s"${roots.last}/$f")
             .coalesce(1).write.mode("overwrite")
             .parquet(s"$staging/$f"))
-      })
+    }
     val (mtf, mdl, _, _) = readFrames(spark, p)
     (StoreRead.parquet(spark, s"${roots.head}/tf").unionByName(mtf),
       StoreRead.parquet(spark, s"${roots.head}/dl").unionByName(mdl),
@@ -581,7 +531,7 @@ object LexIndex {
     * rows too.
     */
   private[graft] def writeStreamSegment(dir: String,
-      frames: (DataFrame, DataFrame, DataFrame, DataFrame)): Unit = {
+                                        frames: Frames): Unit = {
     val (tf, dl, df, stats) = frames
     tf.withColumn("tbkt", pmod(hash(col("term")), lit(TermBuckets)))
       .write.mode("overwrite").parquet(s"$dir/tf")
@@ -590,6 +540,12 @@ object LexIndex {
     stats.coalesce(1).write.mode("overwrite").parquet(s"$dir/stats")
   }
 
+  /** Read back one [[writeStreamSegment]] directory. */
+  private[graft] def readStreamSegment(spark: SparkSession,
+                                       dir: String): Frames =
+    (spark.read.parquet(s"$dir/tf"), spark.read.parquet(s"$dir/dl"),
+      spark.read.parquet(s"$dir/df"), spark.read.parquet(s"$dir/stats"))
+
   /** Fold MANY disjoint segment frame-sets — the streamed-append read
     * path (a standing segment plus one segment per committed
     * micro-batch): [[merge]] generalized to N by left fold; tf/dl
@@ -597,21 +553,8 @@ object LexIndex {
     * caller's staging contract (each doc lands in exactly one
     * segment), so the per-fold guard is off.
     */
-  def mergeAll(segs: Seq[(DataFrame, DataFrame, DataFrame, DataFrame)])
-      : (DataFrame, DataFrame, DataFrame, DataFrame) = {
+  def mergeAll(segs: Seq[Frames]): Frames = {
     require(segs.nonEmpty, "need at least one segment to fold")
     segs.reduce((a, b) => merge(a, b, checkDisjoint = false))
   }
-
-  /** COMPACTION of the segment chain (the q302 step for the text
-    * side): materialize the merged head into one fresh single-segment
-    * snapshot — per-bucket single postings files, one file per side
-    * frame — atomically published. Serving from the compacted store
-    * MUST equal serving from the segment fold (q306 binds q176's
-    * oracle string), and reads stop paying the per-segment union +
-    * read-side df/stats re-aggregation.
-    */
-  def compactedFrames(spark: SparkSession, dir: String)
-      : (DataFrame, DataFrame, DataFrame, DataFrame) =
-    compactedHeadFrames(spark, dir, chain = "")
 }

@@ -6,10 +6,9 @@ import scala.jdk.CollectionConverters._
   * ([[AnnIndex]], [[LexIndex]]): build into a pid-suffixed staging
   * directory, stamp `_DONE`, `Files.move(ATOMIC_MOVE)` to the stable
   * target; the loser of a concurrent cross-JVM race deletes its
-  * staging and reads the winner's store. Within one JVM, callers wrap
-  * [[ensure]] in a computeIfAbsent (single-flight) — two threads
-  * building into the SAME pid-keyed staging dir would corrupt each
-  * other mid-write.
+  * staging and reads the winner's store. Within one JVM, [[ensure]] is
+  * single-flight per target path — two threads building into the SAME
+  * pid-keyed staging dir would corrupt each other mid-write.
   */
 private[graft] object StoreCommit {
 
@@ -49,10 +48,16 @@ private[graft] object StoreCommit {
       }
   }
 
+  private val ensured = new java.util.concurrent.ConcurrentHashMap[
+    String, java.util.concurrent.CompletableFuture[String]]
+
   /** Returns `target`, building it first if no `_DONE` stamp exists.
     * `build` receives the staging path and must write every file of
-    * the store under it. */
-  def ensure(target: String)(build: String => Unit): String = {
+    * the store under it. Single-flight per target within the JVM. */
+  def ensure(target: String)(build: String => Unit): String =
+    singleFlight(ensured, target)(publish(target)(build))
+
+  private def publish(target: String)(build: String => Unit): String = {
     if (new java.io.File(target, "_DONE").exists()) return target
     val staging = target + s"-stage-${ProcessHandle.current().pid}"
     build(staging)

@@ -295,13 +295,7 @@ object Text {
     */
   def bm25TopK(docs: DataFrame, idCol: String, textCol: String,
                k: Int): DataFrame = {
-    val terms = docs.select(col(idCol).as("id"),
-      explode(cleanTokens(col(textCol))).as("term"))
-    val tf = terms.groupBy("id", "term").agg(count(lit(1)).as("tf"))
-    val dl = terms.groupBy("id").agg(count(lit(1)).as("dl"))
-    val dfreq = tf.groupBy("term").agg(count(lit(1)).as("df"))
-    val stats = terms.agg(count(lit(1)).as("n_terms"))
-      .crossJoin(docs.agg(count(lit(1)).as("n_docs")))
+    val (tf, dl, dfreq, stats) = LexIndex.buildFrames(docs, idCol, textCol)
     val scored = tf.join(dl, "id").join(dfreq, "term")
       .crossJoin(broadcast(stats))
       .withColumn("avgdl",
@@ -352,14 +346,8 @@ object Text {
   def bm25RetrieveDf(docs: DataFrame, idCol: String, textCol: String,
                      queries: DataFrame, k: Int,
                      excludeSelf: Boolean = false): DataFrame = {
-    val terms = docs.select(col(idCol).as("id"),
-      explode(cleanTokens(col(textCol))).as("term"))
-    val tf = terms.groupBy("id", "term").agg(count(lit(1)).as("tf"))
-    val dl = terms.groupBy("id").agg(count(lit(1)).as("dl"))
-    val dfreq = tf.groupBy("term").agg(count(lit(1)).as("df"))
-    val stats = terms.agg(count(lit(1)).as("n_terms"))
-      .crossJoin(docs.agg(count(lit(1)).as("n_docs")))
-    bm25ScoreQueries(queries, tf, dl, dfreq, stats, k, excludeSelf)
+    val (tf, dl, dfreq, stats) = LexIndex.buildFrames(docs, idCol, textCol)
+    bm25RetrieveStored(queries, tf, dl, dfreq, stats, k, excludeSelf)
   }
 
   /** [[bm25RetrieveDf]] SERVED FROM a stored inverted index — the
@@ -372,23 +360,16 @@ object Text {
     * queries pay postings-of-their-terms, not a corpus scan).
     * Bit-identical to [[bm25RetrieveDf]] on the same corpus: the
     * stored frames are the deterministic count aggregates the on-the-
-    * fly form computes — the spec asserts the equality.
+    * fly form computes — the spec asserts the equality. Over index
+    * frames tf(id, term, tf), dl(id, dl), df(term, df), stats(n_terms,
+    * n_docs): DISTINCT query terms broadcast onto the postings, 4
+    * dp-floored per-term weights summed through DECIMAL(18,4), top-k
+    * per query with id tie-breaks.
     */
   def bm25RetrieveStored(queries: DataFrame, tf: DataFrame,
                          dl: DataFrame, dfreq: DataFrame,
                          stats: DataFrame, k: Int,
-                         excludeSelf: Boolean = false): DataFrame =
-    bm25ScoreQueries(queries, tf, dl, dfreq, stats, k, excludeSelf)
-
-  /** The shared BM25 retrieval tail over index frames tf(id, term,
-    * tf), dl(id, dl), df(term, df), stats(n_terms, n_docs): DISTINCT
-    * query terms broadcast onto the postings, 4 dp-floored per-term
-    * weights summed through DECIMAL(18,4), top-k per query with id
-    * tie-breaks. */
-  private def bm25ScoreQueries(queries: DataFrame, tf: DataFrame,
-                               dl: DataFrame, dfreq: DataFrame,
-                               stats: DataFrame, k: Int,
-                               excludeSelf: Boolean): DataFrame = {
+                         excludeSelf: Boolean = false): DataFrame = {
     val qterms0 = queries
       .select(col("query_id"),
         explode(array_distinct(cleanTokens(col("query_text"))))
@@ -419,7 +400,7 @@ object Text {
     val (tfPruned, qterms, dfPruned) =
       if (bucketed) {
         val qt = qterms0.withColumn("tbkt",
-          pmod(hash(col("term")), lit(graft.ops.LexIndex.TermBuckets)))
+          pmod(hash(col("term")), lit(LexIndex.TermBuckets)))
         val pairs = qt.select(col("term"), col("tbkt")).distinct()
           .collect()
         val bkts = pairs.map(_.getInt(1)).distinct.toSeq

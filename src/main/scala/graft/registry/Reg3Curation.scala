@@ -7,7 +7,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.ops.{Agg, Artifacts, Audio, Curate, Dedup, EventsOps, Graph, Layout, Multimodal, Num, Prune, Sentiment, Sim, Sketch, Skew, Star, Text}
+import graft.ops.{Agg, AnnIndex, Artifacts, Audio, Curate, Dedup, EventsOps, Graph, Layout, Multimodal, Num, Prune, Sentiment, Sim, Sketch, Skew, Star, Text}
 import graft.sources.Sources
 
 import Shared._
@@ -838,22 +838,7 @@ private[graft] object Reg3Curation {
     // recall. The oracle replays both kmeans chains, both coverage
     // arms, and the decision arithmetic — so the policy, not just the
     // measurement, is driver-gated at every scale factor.
-    "q314_ann_retrain_decision" -> ((s, dir) => {
-      val (kSized, _) = graft.ops.AnnIndex.sizedParams(s, dir)
-      val growth = graft.ops.AnnIndex
-        .postingsAsOf(s, dir, version = 1L, k = kSized)
-        .groupBy(col("is_delta")).agg(count(lit(1)).as("n"))
-        .collect().map(r => r.getBoolean(0) -> r.getLong(1)).toMap
-      Curate.retrainDecision(
-        isEval = col("vec_id") % 97 === 0, threshold = 0.25,
-        nStanding = growth.getOrElse(false, 0L),
-        nDelta = growth.getOrElse(true, 0L),
-        staleCells = k =>
-          graft.ops.AnnIndex.cells(s, dir, "base", k = k),
-        resizedCells = k =>
-          graft.ops.AnnIndex.cells(s, dir, "full", k = k),
-        cacheKey = Some(dir))
-    }),
+    "q314_ann_retrain_decision" -> ((s, dir) => retrainDecision(s, dir)),
 
 
     // curation/ANN — EXECUTING the retrain q314 decides (r17; r16
@@ -872,44 +857,20 @@ private[graft] object Reg3Curation {
     // at every scale factor (the fixture flips: RETRAIN at
     // sf0.001/sf0.1, keep at sf0.01).
     "q321_ann_retrain_execute" -> ((s, dir) => {
-      val (kSized, probes) = graft.ops.AnnIndex.sizedParams(s, dir)
-      val growth = graft.ops.AnnIndex
-        .postingsAsOf(s, dir, version = 1L, k = kSized)
-        .groupBy(col("is_delta")).agg(count(lit(1)).as("n"))
-        .collect().map(r => r.getBoolean(0) -> r.getLong(1)).toMap
-      val dec = Curate.retrainDecision(
-        isEval = col("vec_id") % 97 === 0, threshold = 0.25,
-        nStanding = growth.getOrElse(false, 0L),
-        nDelta = growth.getOrElse(true, 0L),
-        staleCells = k =>
-          graft.ops.AnnIndex.cells(s, dir, "base", k = k),
-        resizedCells = k =>
-          graft.ops.AnnIndex.cells(s, dir, "full", k = k),
-        cacheKey = Some(dir)).collect()(0)
-      val epoch = graft.ops.AnnIndex.rotateIfRetrain(s, dir,
-        retrain = dec.getBoolean(10), kResized = kSized)
-      val codes =
-        if (epoch == 1)
-          graft.ops.AnnIndex.codes(s, dir, tag = "full", k = kSized)
-            .select((Seq(col("vec_id"), col("cell")) ++
-              graft.ops.AnnIndex.codeCols(4)): _*)
-        else graft.ops.AnnIndex
-          .postingsAsOf(s, dir, version = 1L, k = kSized)
-          .select((Seq(col("vec_id"), col("cell")) ++
-            graft.ops.AnnIndex.codeCols(4)): _*)
+      val (kSized, probes) = AnnIndex.sizedParams(s, dir)
+      val epoch = AnnIndex.rotateIfRetrain(s, dir,
+        retrain = retrainDecision(s, dir).collect()(0).getBoolean(10),
+        kResized = kSized)
       val tag = if (epoch == 1) "full" else "base"
-      val queries = t(s, dir, "embeddings")
-        .where(col("vec_id") < 10)
-        .join(codes.select(col("vec_id"), col("cell")), Seq("vec_id"))
-      Sim.topKIvfAdcCoded(queries, codes,
-          graft.ops.AnnIndex.probeCentroids(s, dir, tag = tag,
-            k = kSized),
-          graft.ops.AnnIndex.books(s, dir, tag = tag, k = kSized),
-          k = 5, probes = probes)
+      val posts =
+        if (epoch == 1) AnnIndex.codes(s, dir, tag = "full", k = kSized)
+        else AnnIndex.postingsAsOf(s, dir, 1L, k = kSized)
+      AnnIndex.serveIvfAdc(s, dir, posts,
+          AnnIndex.probeCentroids(s, dir, tag = tag, k = kSized), tag,
+          kSized, probes)
         .select(
           lit(if (epoch == 1) "retrained" else "stale").as("branch"),
-          lit(epoch.toLong).as("epoch"),
-          col("q_id"), col("c_id"), col("rk"))
+          lit(epoch.toLong).as("epoch"), col("*"))
         .orderBy("q_id", "rk")
     }),
 
@@ -928,48 +889,44 @@ private[graft] object Reg3Curation {
     // by the derived flag — an engine that deleted from the wrong
     // epoch, or rotated without deleting, fails the gate.
     "q331_epoch_takedown_serve" -> ((s, dir) => {
-      val (kSized, probes) = graft.ops.AnnIndex.sizedParams(s, dir)
-      val growth = graft.ops.AnnIndex
-        .postingsAsOf(s, dir, version = 1L, k = kSized)
-        .groupBy(col("is_delta")).agg(count(lit(1)).as("n"))
-        .collect().map(r => r.getBoolean(0) -> r.getLong(1)).toMap
-      val dec = Curate.retrainDecision(
-        isEval = col("vec_id") % 97 === 0, threshold = 0.25,
-        nStanding = growth.getOrElse(false, 0L),
-        nDelta = growth.getOrElse(true, 0L),
-        staleCells = k =>
-          graft.ops.AnnIndex.cells(s, dir, "base", k = k),
-        resizedCells = k =>
-          graft.ops.AnnIndex.cells(s, dir, "full", k = k),
-        cacheKey = Some(dir)).collect()(0)
-      val epoch = graft.ops.AnnIndex.rotateIfRetrain(s, dir,
-        retrain = dec.getBoolean(10), kResized = kSized)
+      val (kSized, probes) = AnnIndex.sizedParams(s, dir)
+      val epoch = AnnIndex.rotateIfRetrain(s, dir,
+        retrain = retrainDecision(s, dir).collect()(0).getBoolean(10),
+        kResized = kSized)
       val (posts, cents, tag) =
         if (epoch == 1) {
-          val (p, c) = graft.ops.AnnIndex.epochTakedownStore(s, dir,
-            k = kSized)
+          val (p, c) = AnnIndex.epochTakedownStore(s, dir, k = kSized)
           (p, c, "full")
         } else
-          (graft.ops.AnnIndex.postingsAsOf(s, dir, version = 2L,
-            k = kSized, chain = "md"),
-            graft.ops.AnnIndex.probeCentsAsOf(s, dir, version = 2L,
-              k = kSized, chain = "md"), "base")
-      val codes = posts.select(
-        (Seq(col("vec_id"), col("cell")) ++
-          graft.ops.AnnIndex.codeCols(4)): _*)
-      val queries = t(s, dir, "embeddings")
-        .where(col("vec_id") < 10)
-        .join(posts.select(col("vec_id"), col("cell")), Seq("vec_id"))
-      Sim.topKIvfAdcCoded(queries, codes, cents,
-          graft.ops.AnnIndex.books(s, dir, tag = tag, k = kSized),
-          k = 5, probes = probes)
+          (AnnIndex.postingsAsOf(s, dir, 2L, k = kSized, chain = "md"),
+            AnnIndex.probeCentsAsOf(s, dir, 2L, k = kSized, chain = "md"),
+            "base")
+      AnnIndex.serveIvfAdc(s, dir, posts, cents, tag, kSized, probes)
         .select(
           lit(if (epoch == 1) "retrained" else "stale").as("branch"),
-          lit(epoch.toLong).as("epoch"),
-          col("q_id"), col("c_id"), col("rk"))
+          lit(epoch.toLong).as("epoch"), col("*"))
         .orderBy("q_id", "rk")
     })
   )
+
+  /** q314's measured retrain decision: growth read off the maintained
+    * history head (n_standing / n_delta from the is_delta flags), the
+    * stale base-trained and resized full-trained stores measured at
+    * matched coverage ([[Curate.retrainDecision]]) — q321 and q331 act
+    * on its row. */
+  private def retrainDecision(s: SparkSession, dir: String): DataFrame = {
+    val (kSized, _) = AnnIndex.sizedParams(s, dir)
+    val growth = AnnIndex.postingsAsOf(s, dir, version = 1L, k = kSized)
+      .groupBy(col("is_delta")).agg(count(lit(1)).as("n"))
+      .collect().map(r => r.getBoolean(0) -> r.getLong(1)).toMap
+    Curate.retrainDecision(
+      isEval = col("vec_id") % 97 === 0, threshold = 0.25,
+      nStanding = growth.getOrElse(false, 0L),
+      nDelta = growth.getOrElse(true, 0L),
+      staleCells = k => AnnIndex.cells(s, dir, "base", k = k),
+      resizedCells = k => AnnIndex.cells(s, dir, "full", k = k),
+      cacheKey = Some(dir))
+  }
 
   /** One policy's arm of the q295 oracle: the q290 probe-policy CTE
     * tail (probe geometry from per-cell means, own-cell-wins pmin,

@@ -628,7 +628,7 @@ private[graft] object Reg4GraphStats {
     // pass (doc_id%7=3), the mixture planner re-budgets over the
     // SURVIVING corpus with every input read from maintained
     // artifacts — token masses from the tombstone-masked index's dl
-    // frame (LexIndex.framesAfterDelete — no re-tokenization),
+    // frame (the "md" chain head — no re-tokenization),
     // near-dup pairs from the STORED pair artifact filtered to
     // surviving endpoints (signatures are per-doc, the q270 subset
     // property — nothing is re-signed or re-paired), and the cluster
@@ -656,7 +656,7 @@ private[graft] object Reg4GraphStats {
         minJaccard = 0.2)
       val sizes = comp.groupBy("component")
         .agg(count(lit(1)).as("n_members"))
-      val dl = graft.ops.LexIndex.framesAfterDelete(s, dir)._2
+      val dl = graft.ops.LexIndex.framesAsOf(s, dir, 2L, "md")._2
         .select(col("id").as("doc_id"), col("dl").as("n_tok"))
       val eff = docs.where(surviving)
         .select(col("doc_id"), col("lang"))

@@ -7,7 +7,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.ops.{Agg, Artifacts, Audio, Curate, Dedup, EventsOps, Graph, Jpeg, Layout, Multimodal, Num, Prune, Sentiment, Sim, Sketch, Skew, Star, Text}
+import graft.ops.{Agg, Artifacts, Audio, Chains, Curate, Dedup, EventsOps, Graph, Jpeg, Layout, LexIndex, Multimodal, Num, Prune, Sentiment, Sim, Sketch, Skew, Star, Text}
 import graft.sources.Sources
 
 import Shared._
@@ -212,13 +212,8 @@ private[graft] object Reg5Artifacts {
     // broadcast query terms reduce the corpus to matching postings
     // before any other join.
     "q176_bm25_retrieval" -> ((s, dir) =>
-      Text.bm25Retrieve(t(s, dir, "documents"), "doc_id", "text",
-          Seq(("kw_cust", "customer order value"),
-            ("kw_join", "join merge hash"),
-            ("kw_scan", "spark scan filter"),
-            ("kw_win", "window batch sort")), k = 5)
-        .select(col("query_id"), col("id").as("doc_id"),
-          col("n_matched"), col("score"), col("rk"))
+      LexIndex.serveKeywords(s,
+          LexIndex.buildFrames(t(s, dir, "documents")))
         .orderBy("query_id", "rk")),
 
 
@@ -228,19 +223,9 @@ private[graft] object Reg5Artifacts {
     // at query time; one training-pass publishes the store, every
     // query batch (and restart) reads bytes. Bound to q176's oracle
     // string: one contract, on-the-fly and stored engines.
-    "q291_bm25_stored" -> ((s, dir) => {
-      import s.implicits._
-      graft.ops.LexIndex.bm25Retrieve(s, dir,
-          Seq(("kw_cust", "customer order value"),
-            ("kw_join", "join merge hash"),
-            ("kw_scan", "spark scan filter"),
-            ("kw_win", "window batch sort"))
-            .toDF("query_id", "query_text"),
-          k = 5)
-        .select(col("query_id"), col("id").as("doc_id"),
-          col("n_matched"), col("score"), col("rk"))
-        .orderBy("query_id", "rk")
-    }),
+    "q291_bm25_stored" -> ((s, dir) =>
+      LexIndex.serveKeywords(s, LexIndex.frames(s, dir))
+        .orderBy("query_id", "rk")),
 
 
     // artifacts — INCREMENTAL inverted-index maintenance (LexIndex.
@@ -251,22 +236,10 @@ private[graft] object Reg5Artifacts {
     // index. Bound to q176's oracle string: one contract, THREE
     // engines (on-the-fly q176, stored q291, incremental-merge q292).
     "q292_bm25_index_merge" -> ((s, dir) => {
-      import s.implicits._
       val docs = t(s, dir, "documents")
-      val merged = graft.ops.LexIndex.merge(
-        graft.ops.LexIndex.buildFrames(
-          docs.where(col("doc_id") % 5 =!= 0)),
-        graft.ops.LexIndex.buildFrames(
-          docs.where(col("doc_id") % 5 === 0)))
-      Text.bm25RetrieveStored(
-          Seq(("kw_cust", "customer order value"),
-            ("kw_join", "join merge hash"),
-            ("kw_scan", "spark scan filter"),
-            ("kw_win", "window batch sort"))
-            .toDF("query_id", "query_text"),
-          merged._1, merged._2, merged._3, merged._4, k = 5)
-        .select(col("query_id"), col("id").as("doc_id"),
-          col("n_matched"), col("score"), col("rk"))
+      LexIndex.serveKeywords(s, LexIndex.merge(
+          LexIndex.buildFrames(docs.where(col("doc_id") % 5 =!= 0)),
+          LexIndex.buildFrames(docs.where(col("doc_id") % 5 === 0))))
         .orderBy("query_id", "rk")
     }),
 
@@ -280,20 +253,9 @@ private[graft] object Reg5Artifacts {
     // (tf/dl pure unions, df/stats re-summed — merge ≡ build(A∪B),
     // q292's property). Bound to q176's oracle string: one contract,
     // five engines.
-    "q305_bm25_index_serve" -> ((s, dir) => {
-      import s.implicits._
-      val head = graft.ops.LexIndex.framesAsOf(s, dir, 1L)
-      Text.bm25RetrieveStored(
-          Seq(("kw_cust", "customer order value"),
-            ("kw_join", "join merge hash"),
-            ("kw_scan", "spark scan filter"),
-            ("kw_win", "window batch sort"))
-            .toDF("query_id", "query_text"),
-          head._1, head._2, head._3, head._4, k = 5)
-        .select(col("query_id"), col("id").as("doc_id"),
-          col("n_matched"), col("score"), col("rk"))
-        .orderBy("query_id", "rk")
-    }),
+    "q305_bm25_index_serve" -> ((s, dir) =>
+      LexIndex.serveKeywords(s, LexIndex.framesAsOf(s, dir, 1L))
+        .orderBy("query_id", "rk")),
 
 
     // artifacts — TIME-TRAVEL serving (the audit read a maintained
@@ -303,20 +265,9 @@ private[graft] object Reg5Artifacts {
     // physically stores). The oracle is the BM25 chain restricted to
     // the standing slice, so "as of version 0" is itself an
     // oracle-gated contract, not just a readable directory.
-    "q310_lex_asof_serve" -> ((s, dir) => {
-      import s.implicits._
-      val v0 = graft.ops.LexIndex.framesAsOf(s, dir, 0L)
-      Text.bm25RetrieveStored(
-          Seq(("kw_cust", "customer order value"),
-            ("kw_join", "join merge hash"),
-            ("kw_scan", "spark scan filter"),
-            ("kw_win", "window batch sort"))
-            .toDF("query_id", "query_text"),
-          v0._1, v0._2, v0._3, v0._4, k = 5)
-        .select(col("query_id"), col("id").as("doc_id"),
-          col("n_matched"), col("score"), col("rk"))
-        .orderBy("query_id", "rk")
-    }),
+    "q310_lex_asof_serve" -> ((s, dir) =>
+      LexIndex.serveKeywords(s, LexIndex.framesAsOf(s, dir, 0L))
+        .orderBy("query_id", "rk")),
 
 
     // artifacts — STREAMING segment appends (the q282 frozen-append
@@ -375,20 +326,9 @@ private[graft] object Reg5Artifacts {
     // serving-invariant. With q291/q292/q305 the text index now
     // closes build → append → serve → compact under oracle gates,
     // matching the ANN side's lifecycle.
-    "q306_bm25_index_compact" -> ((s, dir) => {
-      import s.implicits._
-      val c = graft.ops.LexIndex.compactedFrames(s, dir)
-      Text.bm25RetrieveStored(
-          Seq(("kw_cust", "customer order value"),
-            ("kw_join", "join merge hash"),
-            ("kw_scan", "spark scan filter"),
-            ("kw_win", "window batch sort"))
-            .toDF("query_id", "query_text"),
-          c._1, c._2, c._3, c._4, k = 5)
-        .select(col("query_id"), col("id").as("doc_id"),
-          col("n_matched"), col("score"), col("rk"))
-        .orderBy("query_id", "rk")
-    }),
+    "q306_bm25_index_compact" -> ((s, dir) =>
+      LexIndex.serveKeywords(s, LexIndex.compactedHeadFrames(s, dir))
+        .orderBy("query_id", "rk")),
 
 
     // artifacts — MID-CHAIN time-travel serving (r15 verdict ask #6:
@@ -401,20 +341,9 @@ private[graft] object Reg5Artifacts {
     // oracle is the BM25 chain scoped to exactly that doc set, so a
     // mid-chain read is an oracle-gated contract: df/dl/stats all
     // reflect the corpus as it stood between the two appends.
-    "q312_lex_midchain_serve" -> ((s, dir) => {
-      import s.implicits._
-      val v1 = graft.ops.LexIndex.framesAsOf(s, dir, 1L, chain = "c3")
-      Text.bm25RetrieveStored(
-          Seq(("kw_cust", "customer order value"),
-            ("kw_join", "join merge hash"),
-            ("kw_scan", "spark scan filter"),
-            ("kw_win", "window batch sort"))
-            .toDF("query_id", "query_text"),
-          v1._1, v1._2, v1._3, v1._4, k = 5)
-        .select(col("query_id"), col("id").as("doc_id"),
-          col("n_matched"), col("score"), col("rk"))
-        .orderBy("query_id", "rk")
-    }),
+    "q312_lex_midchain_serve" -> ((s, dir) =>
+      LexIndex.serveKeywords(s, LexIndex.framesAsOf(s, dir, 1L, "c3"))
+        .orderBy("query_id", "rk")),
 
 
     // artifacts — tombstone DELETES (r16; LexIndex delete scaladoc):
@@ -429,20 +358,9 @@ private[graft] object Reg5Artifacts {
     // corpus, so the delete's effect on every BM25 component (df, dl,
     // avgdl, n_docs) is driver-gated — a masked index that silently
     // served stale df would fail the gate.
-    "q315_lex_delete_serve" -> ((s, dir) => {
-      import s.implicits._
-      val f = graft.ops.LexIndex.framesAfterDelete(s, dir)
-      Text.bm25RetrieveStored(
-          Seq(("kw_cust", "customer order value"),
-            ("kw_join", "join merge hash"),
-            ("kw_scan", "spark scan filter"),
-            ("kw_win", "window batch sort"))
-            .toDF("query_id", "query_text"),
-          f._1, f._2, f._3, f._4, k = 5)
-        .select(col("query_id"), col("id").as("doc_id"),
-          col("n_matched"), col("score"), col("rk"))
-        .orderBy("query_id", "rk")
-    }),
+    "q315_lex_delete_serve" -> ((s, dir) =>
+      LexIndex.serveKeywords(s, LexIndex.framesAsOf(s, dir, 2L, "md"))
+        .orderBy("query_id", "rk")),
 
 
     // artifacts — delete COMPACTION (the reclaim step every tombstone
@@ -453,20 +371,9 @@ private[graft] object Reg5Artifacts {
     // two layouts: masked fold / compacted survivors). With
     // q291/q305/q306/q309/q310/q312 the text index now closes
     // build → append → serve → delete → compact under oracle gates.
-    "q317_lex_delete_compact" -> ((s, dir) => {
-      import s.implicits._
-      val c = graft.ops.LexIndex.compactedFramesAfterDelete(s, dir)
-      Text.bm25RetrieveStored(
-          Seq(("kw_cust", "customer order value"),
-            ("kw_join", "join merge hash"),
-            ("kw_scan", "spark scan filter"),
-            ("kw_win", "window batch sort"))
-            .toDF("query_id", "query_text"),
-          c._1, c._2, c._3, c._4, k = 5)
-        .select(col("query_id"), col("id").as("doc_id"),
-          col("n_matched"), col("score"), col("rk"))
-        .orderBy("query_id", "rk")
-    }),
+    "q317_lex_delete_compact" -> ((s, dir) =>
+      LexIndex.serveKeywords(s, LexIndex.compactedHeadFrames(s, dir, "md"))
+        .orderBy("query_id", "rk")),
 
 
     // artifacts — the MIXED chain served at EVERY version (r17; r16
@@ -484,22 +391,12 @@ private[graft] object Reg5Artifacts {
     // mixed chain is an oracle-gated serving contract, including the
     // capture-time semantics (a global %7 filter in the engine would
     // fail v2's gate).
-    "q322_lex_mixed_asof" -> ((s, dir) => {
-      import s.implicits._
-      val queries = Seq(("kw_cust", "customer order value"),
-        ("kw_join", "join merge hash"),
-        ("kw_scan", "spark scan filter"),
-        ("kw_win", "window batch sort"))
-        .toDF("query_id", "query_text")
+    "q322_lex_mixed_asof" -> ((s, dir) =>
       (0L to 2L).map { v =>
-        val f = graft.ops.LexIndex.framesAsOf(s, dir, v, chain = "m3")
-        Text.bm25RetrieveStored(queries, f._1, f._2, f._3, f._4, k = 5)
-          .select(lit(v).as("version"), col("query_id"),
-            col("id").as("doc_id"), col("n_matched"), col("score"),
-            col("rk"))
+        LexIndex.serveKeywords(s, LexIndex.framesAsOf(s, dir, v, "m3"))
+          .select(lit(v).as("version"), col("*"))
       }.reduce(_.unionByName(_))
-        .orderBy("version", "query_id", "rk")
-    }),
+        .orderBy("version", "query_id", "rk")),
 
 
     // artifacts — EXECUTING the compaction q324 decides (r17, the
@@ -514,33 +411,16 @@ private[graft] object Reg5Artifacts {
     // the replayed policy flag in the layout column — an engine that
     // compacted without the decision, or ignored it, fails the gate.
     "q326_lex_compaction_execute" -> ((s, dir) => {
-      import s.implicits._
-      val decisions = graft.ops.LexIndex
-        .chainStatsFrame(s, dir, Seq("md", "m3"))
-        .withColumn("share",
-          expr("(n_tomb * 1000000) div (n_live + n_tomb)"))
-        .withColumn("compact",
-          col("share") >= 125000 || col("n_segments") >= 4)
-        .select("chain", "compact").collect()
-        .map(r => r.getString(0) -> r.getBoolean(1)).toMap
-      val queries = Seq(("kw_cust", "customer order value"),
-        ("kw_join", "join merge hash"),
-        ("kw_scan", "spark scan filter"),
-        ("kw_win", "window batch sort"))
-        .toDF("query_id", "query_text")
+      val decisions = Chains.compactDecisions(
+        LexIndex.chainStatsFrame(s, dir, Seq("md", "m3")))
       Seq("md", "m3").map { ch =>
         val f =
-          if (decisions(ch))
-            graft.ops.LexIndex.compactedHeadFrames(s, dir, ch)
-          else graft.ops.LexIndex.framesAsOf(s, dir,
-            graft.ops.LexIndex.headVersion(ch), ch)
-        Text.bm25RetrieveStored(queries, f._1, f._2, f._3, f._4,
-            k = 5)
+          if (decisions(ch)) LexIndex.compactedHeadFrames(s, dir, ch)
+          else LexIndex.framesAsOf(s, dir, LexIndex.headVersion(ch), ch)
+        LexIndex.serveKeywords(s, f)
           .select(lit(ch).as("chain"),
             lit(if (decisions(ch)) "compacted" else "masked")
-              .as("layout"),
-            col("query_id"), col("id").as("doc_id"),
-            col("n_matched"), col("score"), col("rk"))
+              .as("layout"), col("*"))
       }.reduce(_.unionByName(_))
         .orderBy("chain", "query_id", "rk")
     }),
@@ -558,33 +438,16 @@ private[graft] object Reg5Artifacts {
     // invariant by append disjointness; the oracle pins WHICH layout
     // served via the replayed rule in the layout column.
     "q328_lex_tiered_execute" -> ((s, dir) => {
-      import s.implicits._
-      val decisions = graft.ops.LexIndex
-        .chainStatsFrame(s, dir, Seq("c4", "c3"))
-        .withColumn("share",
-          expr("(n_tomb * 1000000) div (n_live + n_tomb)"))
-        .withColumn("compact",
-          col("share") >= 125000 || col("n_segments") >= 4)
-        .select("chain", "compact").collect()
-        .map(r => r.getString(0) -> r.getBoolean(1)).toMap
-      val queries = Seq(("kw_cust", "customer order value"),
-        ("kw_join", "join merge hash"),
-        ("kw_scan", "spark scan filter"),
-        ("kw_win", "window batch sort"))
-        .toDF("query_id", "query_text")
+      val decisions = Chains.compactDecisions(
+        LexIndex.chainStatsFrame(s, dir, Seq("c4", "c3")))
       Seq("c4", "c3").map { ch =>
         val f =
-          if (decisions(ch))
-            graft.ops.LexIndex.tieredHeadFrames(s, dir, ch)
-          else graft.ops.LexIndex.framesAsOf(s, dir,
-            graft.ops.LexIndex.headVersion(ch), ch)
-        Text.bm25RetrieveStored(queries, f._1, f._2, f._3, f._4,
-            k = 5)
+          if (decisions(ch)) LexIndex.tieredHeadFrames(s, dir, ch)
+          else LexIndex.framesAsOf(s, dir, LexIndex.headVersion(ch), ch)
+        LexIndex.serveKeywords(s, f)
           .select(lit(ch).as("chain"),
-            lit(if (decisions(ch)) "tiered" else "fold")
-              .as("layout"),
-            col("query_id"), col("id").as("doc_id"),
-            col("n_matched"), col("score"), col("rk"))
+            lit(if (decisions(ch)) "tiered" else "fold").as("layout"),
+            col("*"))
       }.reduce(_.unionByName(_))
         .orderBy("chain", "query_id", "rk")
     }),

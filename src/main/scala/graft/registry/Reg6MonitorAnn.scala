@@ -7,7 +7,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.ops.{Agg, Artifacts, Audio, Curate, Dedup, EventsOps, Graph, Layout, Multimodal, Num, Prune, Sentiment, Sim, Sketch, Skew, Star, Text}
+import graft.ops.{Agg, AnnIndex, Artifacts, Audio, Chains, Curate, Dedup, EventsOps, Graph, Layout, LexIndex, Multimodal, Num, Prune, Sentiment, Sim, Sketch, Skew, Star, Text}
 import graft.sources.Sources
 
 import Shared._
@@ -1096,21 +1096,10 @@ private[graft] object Reg6MonitorAnn {
     // trained cell count), so the driver gate proves both the
     // maintained-history serving AND the sizing arithmetic.
     "q299_ann_index_serve" -> ((s, dir) => {
-      val (k, probes) = graft.ops.AnnIndex.sizedParams(s, dir)
-      val head = graft.ops.AnnIndex.postingsAsOf(s, dir, version = 1L,
-        k = k)
-      val codes = head.select(
-        (Seq(col("vec_id"), col("cell")) ++
-          graft.ops.AnnIndex.codeCols(4)): _*)
-      val queries = t(s, dir, "embeddings")
-        .where(col("vec_id") < 10)
-        .join(head.select(col("vec_id"), col("cell")), Seq("vec_id"))
-      Sim.topKIvfAdcCoded(queries, codes,
-          graft.ops.AnnIndex.probeCentroids(s, dir, tag = "base",
-            k = k),
-          graft.ops.AnnIndex.books(s, dir, tag = "base", k = k),
-          k = 5, probes = probes)
-        .select(col("q_id"), col("c_id"), col("rk"))
+      val (k, probes) = AnnIndex.sizedParams(s, dir)
+      AnnIndex.serveIvfAdc(s, dir, AnnIndex.postingsAsOf(s, dir, 1L, k = k),
+          AnnIndex.probeCentroids(s, dir, tag = "base", k = k), "base", k,
+          probes)
         .orderBy("q_id", "rk")
     }),
 
@@ -1152,7 +1141,7 @@ private[graft] object Reg6MonitorAnn {
 
 
     // ANN — index COMPACTION, the lifecycle's last step
-    // (AnnIndex.compactedPostings scaladoc): the merged head rewritten
+    // (AnnIndex.compactedHeadPostings scaladoc): the merged head rewritten
     // into one fresh single-file snapshot store (appends accrue
     // per-version file fragmentation; compaction folds the chain),
     // then the SAME top-5 serving as q299 runs against the compacted
@@ -1172,21 +1161,9 @@ private[graft] object Reg6MonitorAnn {
     // corpus side to the standing slice, so "as of v0" is an
     // oracle-gated serving contract at the sized k/probes.
     "q311_ann_asof_serve" -> ((s, dir) => {
-      val (k, probes) = graft.ops.AnnIndex.sizedParams(s, dir)
-      val v0 = graft.ops.AnnIndex.postingsAsOf(s, dir, version = 0L,
-        k = k)
-      val codes = v0.select(
-        (Seq(col("vec_id"), col("cell")) ++
-          graft.ops.AnnIndex.codeCols(4)): _*)
-      val queries = t(s, dir, "embeddings")
-        .where(col("vec_id") < 10)
-        .join(v0.select(col("vec_id"), col("cell")), Seq("vec_id"))
-      Sim.topKIvfAdcCoded(queries, codes,
-          graft.ops.AnnIndex.probeCentsAsOf(s, dir, version = 0L,
-            k = k),
-          graft.ops.AnnIndex.books(s, dir, tag = "base", k = k),
-          k = 5, probes = probes)
-        .select(col("q_id"), col("c_id"), col("rk"))
+      val (k, probes) = AnnIndex.sizedParams(s, dir)
+      AnnIndex.serveIvfAdc(s, dir, AnnIndex.postingsAsOf(s, dir, 0L, k = k),
+          AnnIndex.probeCentsAsOf(s, dir, 0L, k = k), "base", k, probes)
         .orderBy("q_id", "rk")
     }),
 
@@ -1206,21 +1183,11 @@ private[graft] object Reg6MonitorAnn {
     // chain's corpus side to the same doc set, sized k/probes derived
     // in SQL.
     "q313_ann_midchain_serve" -> ((s, dir) => {
-      val (k, probes) = graft.ops.AnnIndex.sizedParams(s, dir)
-      val v1 = graft.ops.AnnIndex.postingsAsOf(s, dir, version = 1L,
-        k = k, chain = "c3")
-      val codes = v1.select(
-        (Seq(col("vec_id"), col("cell")) ++
-          graft.ops.AnnIndex.codeCols(4)): _*)
-      val queries = t(s, dir, "embeddings")
-        .where(col("vec_id") < 10)
-        .join(v1.select(col("vec_id"), col("cell")), Seq("vec_id"))
-      Sim.topKIvfAdcCoded(queries, codes,
-          graft.ops.AnnIndex.probeCentsAsOf(s, dir, version = 1L,
-            k = k, chain = "c3"),
-          graft.ops.AnnIndex.books(s, dir, tag = "base", k = k),
-          k = 5, probes = probes)
-        .select(col("q_id"), col("c_id"), col("rk"))
+      val (k, probes) = AnnIndex.sizedParams(s, dir)
+      AnnIndex.serveIvfAdc(s, dir,
+          AnnIndex.postingsAsOf(s, dir, 1L, k = k, chain = "c3"),
+          AnnIndex.probeCentsAsOf(s, dir, 1L, k = k, chain = "c3"), "base",
+          k, probes)
         .orderBy("q_id", "rk")
     }),
 
@@ -1240,19 +1207,11 @@ private[graft] object Reg6MonitorAnn {
     // restricts the frozen chain's corpus side (candidates,
     // own-cells, probe geometry) to the survivors.
     "q316_ann_delete_serve" -> ((s, dir) => {
-      val (k, probes) = graft.ops.AnnIndex.sizedParams(s, dir)
-      val surv = graft.ops.AnnIndex.postingsAfterDelete(s, dir, k = k)
-      val codes = surv.select(
-        (Seq(col("vec_id"), col("cell")) ++
-          graft.ops.AnnIndex.codeCols(4)): _*)
-      val queries = t(s, dir, "embeddings")
-        .where(col("vec_id") < 10)
-        .join(surv.select(col("vec_id"), col("cell")), Seq("vec_id"))
-      Sim.topKIvfAdcCoded(queries, codes,
-          graft.ops.AnnIndex.probeCentsAfterDelete(s, dir, k = k),
-          graft.ops.AnnIndex.books(s, dir, tag = "base", k = k),
-          k = 5, probes = probes)
-        .select(col("q_id"), col("c_id"), col("rk"))
+      val (k, probes) = AnnIndex.sizedParams(s, dir)
+      AnnIndex.serveIvfAdc(s, dir,
+          AnnIndex.postingsAsOf(s, dir, 2L, k = k, chain = "md"),
+          AnnIndex.probeCentsAsOf(s, dir, 2L, k = k, chain = "md"), "base",
+          k, probes)
         .orderBy("q_id", "rk")
     }),
 
@@ -1264,21 +1223,11 @@ private[graft] object Reg6MonitorAnn {
     // index now closes build → append → serve → delete → compact
     // under oracle gates, matching the text side's lifecycle.
     "q318_ann_delete_compact" -> ((s, dir) => {
-      val (k, probes) = graft.ops.AnnIndex.sizedParams(s, dir)
-      val compacted = graft.ops.AnnIndex
-        .compactedPostingsAfterDelete(s, dir, k = k)
-      val codes = compacted.select(
-        (Seq(col("vec_id"), col("cell")) ++
-          graft.ops.AnnIndex.codeCols(4)): _*)
-      val queries = t(s, dir, "embeddings")
-        .where(col("vec_id") < 10)
-        .join(compacted.select(col("vec_id"), col("cell")),
-          Seq("vec_id"))
-      Sim.topKIvfAdcCoded(queries, codes,
-          graft.ops.AnnIndex.probeCentsAfterDelete(s, dir, k = k),
-          graft.ops.AnnIndex.books(s, dir, tag = "base", k = k),
-          k = 5, probes = probes)
-        .select(col("q_id"), col("c_id"), col("rk"))
+      val (k, probes) = AnnIndex.sizedParams(s, dir)
+      AnnIndex.serveIvfAdc(s, dir,
+          AnnIndex.compactedHeadPostings(s, dir, k = k, chain = "md"),
+          AnnIndex.probeCentsAsOf(s, dir, 2L, k = k, chain = "md"), "base",
+          k, probes)
         .orderBy("q_id", "rk")
     }),
 
@@ -1302,17 +1251,13 @@ private[graft] object Reg6MonitorAnn {
     // The oracle replays the counts from the corpus predicates, the
     // chain topologies as contract constants, and the rule.
     "q324_compaction_policy" -> ((s, dir) => {
-      val (k, _) = graft.ops.AnnIndex.sizedParams(s, dir)
+      val (k, _) = AnnIndex.sizedParams(s, dir)
       val chains = Seq("", "c3", "c4", "m3", "md")
-      graft.ops.AnnIndex.chainStatsFrame(s, dir, chains, k = k)
-        .select(lit("ann").as("side"), col("*"))
-        .unionByName(
-          graft.ops.LexIndex.chainStatsFrame(s, dir, chains)
-            .select(lit("lex").as("side"), col("*")))
-        .withColumn("tomb_share_e6",
-          expr("(n_tomb * 1000000) div (n_live + n_tomb)"))
-        .withColumn("compact",
-          col("tomb_share_e6") >= 125000 || col("n_segments") >= 4)
+      Chains.compactionPolicy(
+          AnnIndex.chainStatsFrame(s, dir, chains, k = k)
+            .select(lit("ann").as("side"), col("*"))
+            .unionByName(LexIndex.chainStatsFrame(s, dir, chains)
+              .select(lit("lex").as("side"), col("*"))))
         .orderBy("side", "chain")
     }),
 
@@ -1328,23 +1273,13 @@ private[graft] object Reg6MonitorAnn {
     // a filter). The oracle replays the frozen chain with the corpus
     // side scoped per version, union'd with the version column.
     "q323_ann_mixed_asof" -> ((s, dir) => {
-      val (k, probes) = graft.ops.AnnIndex.sizedParams(s, dir)
+      val (k, probes) = AnnIndex.sizedParams(s, dir)
       (0L to 2L).map { v =>
-        val pv = graft.ops.AnnIndex.postingsAsOf(s, dir, v, k = k,
-          chain = "m3")
-        val codes = pv.select(
-          (Seq(col("vec_id"), col("cell")) ++
-            graft.ops.AnnIndex.codeCols(4)): _*)
-        val queries = t(s, dir, "embeddings")
-          .where(col("vec_id") < 10)
-          .join(pv.select(col("vec_id"), col("cell")), Seq("vec_id"))
-        Sim.topKIvfAdcCoded(queries, codes,
-            graft.ops.AnnIndex.probeCentsAsOf(s, dir, v, k = k,
-              chain = "m3"),
-            graft.ops.AnnIndex.books(s, dir, tag = "base", k = k),
-            k = 5, probes = probes)
-          .select(lit(v).as("version"), col("q_id"), col("c_id"),
-            col("rk"))
+        AnnIndex.serveIvfAdc(s, dir,
+            AnnIndex.postingsAsOf(s, dir, v, k = k, chain = "m3"),
+            AnnIndex.probeCentsAsOf(s, dir, v, k = k, chain = "m3"), "base",
+            k, probes)
+          .select(lit(v).as("version"), col("*"))
       }.reduce(_.unionByName(_))
         .orderBy("version", "q_id", "rk")
     }),
@@ -1357,39 +1292,21 @@ private[graft] object Reg6MonitorAnn {
     // are layout-invariant (q318's contract); the oracle pins WHICH
     // layout served via the replayed policy flag.
     "q327_ann_compaction_execute" -> ((s, dir) => {
-      val (k, probes) = graft.ops.AnnIndex.sizedParams(s, dir)
-      val decisions = graft.ops.AnnIndex
-        .chainStatsFrame(s, dir, Seq("md", "m3"), k = k)
-        .withColumn("share",
-          expr("(n_tomb * 1000000) div (n_live + n_tomb)"))
-        .withColumn("compact",
-          col("share") >= 125000 || col("n_segments") >= 4)
-        .select("chain", "compact").collect()
-        .map(r => r.getString(0) -> r.getBoolean(1)).toMap
+      val (k, probes) = AnnIndex.sizedParams(s, dir)
+      val decisions = Chains.compactDecisions(
+        AnnIndex.chainStatsFrame(s, dir, Seq("md", "m3"), k = k))
       Seq("md", "m3").map { ch =>
-        val hv = graft.ops.AnnIndex.headVersion(ch)
+        val hv = AnnIndex.headVersion(ch)
         val posts =
           if (decisions(ch))
-            graft.ops.AnnIndex.compactedHeadPostings(s, dir, k = k,
-              chain = ch)
-          else graft.ops.AnnIndex.postingsAsOf(s, dir, hv, k = k,
-            chain = ch)
-        val codes = posts.select(
-          (Seq(col("vec_id"), col("cell")) ++
-            graft.ops.AnnIndex.codeCols(4)): _*)
-        val queries = t(s, dir, "embeddings")
-          .where(col("vec_id") < 10)
-          .join(posts.select(col("vec_id"), col("cell")),
-            Seq("vec_id"))
-        Sim.topKIvfAdcCoded(queries, codes,
-            graft.ops.AnnIndex.probeCentsAsOf(s, dir, hv, k = k,
-              chain = ch),
-            graft.ops.AnnIndex.books(s, dir, tag = "base", k = k),
-            k = 5, probes = probes)
+            AnnIndex.compactedHeadPostings(s, dir, k = k, chain = ch)
+          else AnnIndex.postingsAsOf(s, dir, hv, k = k, chain = ch)
+        AnnIndex.serveIvfAdc(s, dir, posts,
+            AnnIndex.probeCentsAsOf(s, dir, hv, k = k, chain = ch), "base",
+            k, probes)
           .select(lit(ch).as("chain"),
             lit(if (decisions(ch)) "compacted" else "masked")
-              .as("layout"),
-            col("q_id"), col("c_id"), col("rk"))
+              .as("layout"), col("*"))
       }.reduce(_.unionByName(_))
         .orderBy("chain", "q_id", "rk")
     }),
@@ -1405,42 +1322,22 @@ private[graft] object Reg6MonitorAnn {
     // plain fold. Rows are layout-invariant; the oracle pins WHICH
     // layout served via the replayed rule.
     "q329_ann_tiered_execute" -> ((s, dir) => {
-      val (k, probes) = graft.ops.AnnIndex.sizedParams(s, dir)
-      val decisions = graft.ops.AnnIndex
-        .chainStatsFrame(s, dir, Seq("c4", "c3"), k = k)
-        .withColumn("share",
-          expr("(n_tomb * 1000000) div (n_live + n_tomb)"))
-        .withColumn("compact",
-          col("share") >= 125000 || col("n_segments") >= 4)
-        .select("chain", "compact").collect()
-        .map(r => r.getString(0) -> r.getBoolean(1)).toMap
+      val (k, probes) = AnnIndex.sizedParams(s, dir)
+      val decisions = Chains.compactDecisions(
+        AnnIndex.chainStatsFrame(s, dir, Seq("c4", "c3"), k = k))
       Seq("c4", "c3").map { ch =>
-        val hv = graft.ops.AnnIndex.headVersion(ch)
+        val hv = AnnIndex.headVersion(ch)
         val (posts, cents) =
           if (decisions(ch))
-            (graft.ops.AnnIndex.tieredHeadPostings(s, dir, k = k,
-              chain = ch),
-              graft.ops.AnnIndex.tieredProbeCents(s, dir, k = k,
-                chain = ch))
+            (AnnIndex.tieredHeadPostings(s, dir, k = k, chain = ch),
+              AnnIndex.tieredProbeCents(s, dir, k = k, chain = ch))
           else
-            (graft.ops.AnnIndex.postingsAsOf(s, dir, hv, k = k,
-              chain = ch),
-              graft.ops.AnnIndex.probeCentsAsOf(s, dir, hv, k = k,
-                chain = ch))
-        val codes = posts.select(
-          (Seq(col("vec_id"), col("cell")) ++
-            graft.ops.AnnIndex.codeCols(4)): _*)
-        val queries = t(s, dir, "embeddings")
-          .where(col("vec_id") < 10)
-          .join(posts.select(col("vec_id"), col("cell")),
-            Seq("vec_id"))
-        Sim.topKIvfAdcCoded(queries, codes, cents,
-            graft.ops.AnnIndex.books(s, dir, tag = "base", k = k),
-            k = 5, probes = probes)
+            (AnnIndex.postingsAsOf(s, dir, hv, k = k, chain = ch),
+              AnnIndex.probeCentsAsOf(s, dir, hv, k = k, chain = ch))
+        AnnIndex.serveIvfAdc(s, dir, posts, cents, "base", k, probes)
           .select(lit(ch).as("chain"),
-            lit(if (decisions(ch)) "tiered" else "fold")
-              .as("layout"),
-            col("q_id"), col("c_id"), col("rk"))
+            lit(if (decisions(ch)) "tiered" else "fold").as("layout"),
+            col("*"))
       }.reduce(_.unionByName(_))
         .orderBy("chain", "q_id", "rk")
     }),
@@ -1482,22 +1379,11 @@ private[graft] object Reg6MonitorAnn {
 
 
     "q302_ann_index_compact" -> ((s, dir) => {
-      val (k, probes) = graft.ops.AnnIndex.sizedParams(s, dir)
-      val compacted = graft.ops.AnnIndex.compactedPostings(s, dir,
-        k = k)
-      val codes = compacted.select(
-        (Seq(col("vec_id"), col("cell")) ++
-          graft.ops.AnnIndex.codeCols(4)): _*)
-      val queries = t(s, dir, "embeddings")
-        .where(col("vec_id") < 10)
-        .join(compacted.select(col("vec_id"), col("cell")),
-          Seq("vec_id"))
-      Sim.topKIvfAdcCoded(queries, codes,
-          graft.ops.AnnIndex.probeCentroids(s, dir, tag = "base",
-            k = k),
-          graft.ops.AnnIndex.books(s, dir, tag = "base", k = k),
-          k = 5, probes = probes)
-        .select(col("q_id"), col("c_id"), col("rk"))
+      val (k, probes) = AnnIndex.sizedParams(s, dir)
+      AnnIndex.serveIvfAdc(s, dir,
+          AnnIndex.compactedHeadPostings(s, dir, k = k),
+          AnnIndex.probeCentroids(s, dir, tag = "base", k = k), "base", k,
+          probes)
         .orderBy("q_id", "rk")
     })
   )

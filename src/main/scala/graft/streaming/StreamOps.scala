@@ -1184,9 +1184,6 @@ object StreamOps {
   // family's. Accounting is recorded in SCALE.md (round-12): after this
   // change a gate query's bench median measures the committed-output
   // read; the one family execution is paid in the first invocation.
-  // `SPARK_GRAFT_STREAM_FRESH=1` bypasses the memo AND restricts the
-  // run to the named gate — the dev/ScaleProbe loop for timing one
-  // engine's machinery in isolation (StreamProbe does this).
 
   private case class Gate(name: String,
       start: () => org.apache.spark.sql.streaming.StreamingQuery,
@@ -1194,9 +1191,6 @@ object StreamOps {
 
   private val familyMemo = new java.util.concurrent.ConcurrentHashMap[
     String, Map[String, scala.util.Try[DataFrame]]]()
-
-  private def freshGates: Boolean =
-    sys.env.get("SPARK_GRAFT_STREAM_FRESH").contains("1")
 
   /** One gate result out of the combined EVENTS family run (memoized
     * per fixture dir per JVM; see the section comment above).
@@ -1215,32 +1209,27 @@ object StreamOps {
   private def familyResult(spark: SparkSession, sfDir: String,
       name: String, family: String,
       gates: (SparkSession, String) => Seq[Gate]): DataFrame = {
-    val m =
-      if (freshGates)
-        runGateFamily(spark, sfDir, gates, Some(name))
-      else familyMemo.computeIfAbsent(s"$sfDir#family#$family",
-        _ => runGateFamily(spark, sfDir, gates, None))
+    val m = familyMemo.computeIfAbsent(s"$sfDir#family#$family",
+      _ => runGateFamily(spark, sfDir, gates))
     m.getOrElse(name,
       sys.error(s"unknown $family-family gate: $name")).get
   }
 
-  /** Start every selected gate concurrently on ONE cloned session,
+  /** Start every gate concurrently on ONE cloned session,
     * drain them all, and collect each gate's result independently (a
     * gate that fails at start, drain, or read carries its own Failure;
     * the others still commit).
     */
   private def runGateFamily(spark: SparkSession, sfDir: String,
-      gates: (SparkSession, String) => Seq[Gate],
-      onlyName: Option[String]): Map[String, scala.util.Try[DataFrame]] = {
+      gates: (SparkSession, String) => Seq[Gate])
+      : Map[String, scala.util.Try[DataFrame]] = {
     import scala.util.Try
     val ns = spark.newSession()
     // 2 state stores / shuffle partitions: the round-10 probe's fit for
     // fixture-scale state (32 stores committing per micro-batch was
     // pure overhead); one conf for the whole family
     ns.conf.set("spark.sql.shuffle.partitions", "2")
-    val selected = gates(ns, sfDir)
-      .filter(g => onlyName.forall(_ == g.name))
-    val started = selected.map(g => g -> Try(g.start()))
+    val started = gates(ns, sfDir).map(g => g -> Try(g.start()))
     started.map { case (g, tq) =>
       g.name -> tq.map { q =>
         try q.processAllAvailable() finally q.stop()
@@ -1428,7 +1417,8 @@ object StreamOps {
             .coalesce(1).write.mode("overwrite")
             .parquet(s"$segs/b$bid")
           val micro = dirsIn().filterNot(_.endsWith("/merged"))
-          if (1 + dirsIn().length >= 4 && micro.nonEmpty) {
+          if (1 + dirsIn().length >= graft.ops.Chains.CompactSegments &&
+              micro.nonEmpty) {
             val tail = dirsIn()
             val staged = s"$segs-staged"
             tail.map(d => ns.read.parquet(d))
@@ -1453,17 +1443,10 @@ object StreamOps {
           .select(cols: _*)
           .unionByName(dirs.map(d => ns.read.parquet(d))
             .reduce(_.unionByName(_)).select(cols: _*))
-        val queries = graft.Tables.load(ns, sfDir, "embeddings")
-          .where(col("vec_id") < 10)
-          .join(posts.select(col("vec_id"), col("cell")),
-            Seq("vec_id"))
-        graft.ops.Sim.topKIvfAdcCoded(queries, posts,
-            graft.ops.AnnIndex.probeCentroids(ns, sfDir,
-              tag = "base", k = k),
-            graft.ops.AnnIndex.books(ns, sfDir, tag = "base", k = k),
-            k = 5, probes = probes)
-          .select(lit(layout).as("layout"), col("q_id"),
-            col("c_id"), col("rk"))
+        graft.ops.AnnIndex.serveIvfAdc(ns, sfDir, posts,
+            graft.ops.AnnIndex.probeCentroids(ns, sfDir, tag = "base",
+              k = k), "base", k, probes)
+          .select(lit(layout).as("layout"), col("*"))
       })
   }
 
@@ -1544,7 +1527,6 @@ object StreamOps {
         }
         .start(),
       () => {
-        import ns.implicits._
         val (tf, dl, dfcum, statscum) =
           graft.ops.LexIndex.framesAsOf(ns, sfDir, 1L)
         val segDirs = Option(new java.io.File(segs).listFiles())
@@ -1568,17 +1550,9 @@ object StreamOps {
         val stAfter = statscum.crossJoin(stNeg)
           .select((col("n_terms") - col("tneg")).as("n_terms"),
             (col("n_docs") - col("dneg")).as("n_docs"))
-        graft.ops.Text.bm25RetrieveStored(
-            Seq(("kw_cust", "customer order value"),
-              ("kw_join", "join merge hash"),
-              ("kw_scan", "spark scan filter"),
-              ("kw_win", "window batch sort"))
-              .toDF("query_id", "query_text"),
-            tf.join(dels, Seq("id"), "left_anti"),
-            dl.join(dels, Seq("id"), "left_anti"),
-            dfAfter, stAfter, k = 5)
-          .select(col("query_id"), col("id").as("doc_id"),
-            col("n_matched"), col("score"), col("rk"))
+        graft.ops.LexIndex.serveKeywords(ns,
+          (tf.join(dels, Seq("id"), "left_anti"),
+            dl.join(dels, Seq("id"), "left_anti"), dfAfter, stAfter))
       })
   }
 
@@ -1613,25 +1587,14 @@ object StreamOps {
         }
         .start(),
       () => {
-        import ns.implicits._
         val standing = graft.ops.LexIndex.framesAsOf(ns, sfDir, 0L)
         val segDirs = Option(new java.io.File(segs).listFiles())
           .getOrElse(Array.empty)
           .filter(_.isDirectory).map(_.toString).sorted.toSeq
-        val streamed = segDirs.map(d => (
-          ns.read.parquet(s"$d/tf"), ns.read.parquet(s"$d/dl"),
-          ns.read.parquet(s"$d/df"), ns.read.parquet(s"$d/stats")))
-        val (tf, dl, dfreq, st) =
-          graft.ops.LexIndex.mergeAll(standing +: streamed)
-        graft.ops.Text.bm25RetrieveStored(
-            Seq(("kw_cust", "customer order value"),
-              ("kw_join", "join merge hash"),
-              ("kw_scan", "spark scan filter"),
-              ("kw_win", "window batch sort"))
-              .toDF("query_id", "query_text"),
-            tf, dl, dfreq, st, k = 5)
-          .select(col("query_id"), col("id").as("doc_id"),
-            col("n_matched"), col("score"), col("rk"))
+        val streamed = segDirs.map(
+          graft.ops.LexIndex.readStreamSegment(ns, _))
+        graft.ops.LexIndex.serveKeywords(ns,
+          graft.ops.LexIndex.mergeAll(standing +: streamed))
       })
   }
 
@@ -1663,9 +1626,7 @@ object StreamOps {
     def dirsIn(): Seq[String] = Option(new java.io.File(segs)
         .listFiles()).getOrElse(Array.empty)
       .filter(_.isDirectory).map(_.toString).sorted.toSeq
-    def readSeg(d: String) = (
-      ns.read.parquet(s"$d/tf"), ns.read.parquet(s"$d/dl"),
-      ns.read.parquet(s"$d/df"), ns.read.parquet(s"$d/stats"))
+    def readSeg(d: String) = graft.ops.LexIndex.readStreamSegment(ns, d)
     Gate("q332_stream_auto_compact",
       () => ns.readStream.schema(docSchema)
         .option("maxFilesPerTrigger", "1").parquet(delta3)
@@ -1677,7 +1638,8 @@ object StreamOps {
           // the q324 rule, inside the commit: 1 standing segment +
           // what this store now holds
           val micro = dirsIn().filterNot(_.endsWith("/merged"))
-          if (1 + dirsIn().length >= 4 && micro.nonEmpty) {
+          if (1 + dirsIn().length >= graft.ops.Chains.CompactSegments &&
+              micro.nonEmpty) {
             // fold the whole streamed tail (micro + any previous
             // merged) into a fresh merged segment; publish THEN
             // retire — the merged write is an eager action reading
@@ -1694,24 +1656,13 @@ object StreamOps {
         }
         .start(),
       () => {
-        import ns.implicits._
         val standing = graft.ops.LexIndex.framesAsOf(ns, sfDir, 0L)
         val dirs = dirsIn()
         val layout =
           if (dirs == Seq(s"$segs/merged")) "tiered" else "fold"
-        val streamed = dirs.map(readSeg)
-        val (tf, dl, dfreq, st) =
-          graft.ops.LexIndex.mergeAll(standing +: streamed)
-        graft.ops.Text.bm25RetrieveStored(
-            Seq(("kw_cust", "customer order value"),
-              ("kw_join", "join merge hash"),
-              ("kw_scan", "spark scan filter"),
-              ("kw_win", "window batch sort"))
-              .toDF("query_id", "query_text"),
-            tf, dl, dfreq, st, k = 5)
-          .select(lit(layout).as("layout"),
-            col("query_id"), col("id").as("doc_id"),
-            col("n_matched"), col("score"), col("rk"))
+        graft.ops.LexIndex.serveKeywords(ns,
+            graft.ops.LexIndex.mergeAll(standing +: dirs.map(readSeg)))
+          .select(lit(layout).as("layout"), col("*"))
       })
   }
 

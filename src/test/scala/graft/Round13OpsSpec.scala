@@ -209,7 +209,8 @@ class Round13OpsSpec extends SparkSpec {
     val queries = Seq(("a", "customer order value"),
       ("b", "join merge hash"))
       .toDF("query_id", "query_text")
-    val stored = ops.LexIndex.bm25Retrieve(spark, dir, queries, 5)
+    val (tf, dl, df, st) = ops.LexIndex.frames(spark, dir)
+    val stored = ops.Text.bm25RetrieveStored(queries, tf, dl, df, st, 5)
     val fly = ops.Text.bm25RetrieveDf(
       Tables.load(spark, dir, "documents"), "doc_id", "text",
       queries, 5)

@@ -301,7 +301,7 @@ class Round14OpsSpec extends SparkSpec {
     assert(served.nonEmpty && served === head,
       "compaction must not change what the index serves")
     val (k, _) = ops.AnnIndex.sizedParams(spark, dir)
-    val compacted = ops.AnnIndex.compactedPostings(spark, dir, k = k)
+    val compacted = ops.AnnIndex.compactedHeadPostings(spark, dir, k = k)
     val headRows = ops.AnnIndex.postingsAsOf(spark, dir, version = 1L,
       k = k)
     assert(compacted.exceptAll(headRows).count() === 0L &&

@@ -98,7 +98,7 @@ class Round15OpsSpec extends SparkSpec {
     same(head._4, full._4, "stats")
     // compaction: serving-invariant (q306 binds the oracle; here the
     // frames themselves) and single-file side frames
-    val c = ops.LexIndex.compactedFrames(spark, dir)
+    val c = ops.LexIndex.compactedHeadFrames(spark, dir)
     same(c._1.drop("tbkt"), full._1, "compacted tf")
     same(c._3, full._3, "compacted df")
     assert(c._2.inputFiles.length === 1 &&

@@ -155,7 +155,7 @@ class Round16OpsSpec extends SparkSpec {
       "holds exactly the deleted ids plus vocab-sized AFTER frames " +
       "(df/stats bit-equal to indexing the survivors from scratch), " +
       "and no served row on either arm carries a deleted id") {
-    val p = ops.LexIndex.ensureDeleteTombstones(spark, dir)
+    val p = ops.LexIndex.ensureAppendHistory(spark, dir, "md").last
     val docs = Tables.load(spark, dir, "documents")
     val dels = spark.read.parquet(p + "/dels")
     val expect = docs.where(ops.LexIndex.deleteSplit)
@@ -167,7 +167,7 @@ class Round16OpsSpec extends SparkSpec {
     // the exact-integer segment algebra (head cum − deleted counts)
     val survivors = ops.LexIndex.buildFrames(
       docs.where(!ops.LexIndex.deleteSplit))
-    val f = ops.LexIndex.framesAfterDelete(spark, dir)
+    val f = ops.LexIndex.framesAsOf(spark, dir, 2L, "md")
     assert(f._3.exceptAll(survivors._3).count() === 0L &&
       survivors._3.exceptAll(f._3).count() === 0L,
       "dfafter must equal the survivors' df, zero-df terms dropped")
@@ -189,7 +189,8 @@ class Round16OpsSpec extends SparkSpec {
       "masked and compacted layouts serve identical rows, and a " +
       "fully-emptied cell disappears instead of dividing by zero") {
     val (k, _) = ops.AnnIndex.sizedParams(spark, dir)
-    val after = ops.AnnIndex.probeCentsAfterDelete(spark, dir, k = k)
+    val after = ops.AnnIndex.probeCentsAsOf(spark, dir, 2L, k = k,
+      chain = "md")
     val onePass = ops.Sim.cellCentroids(
       ops.AnnIndex.postingsAsOf(spark, dir, 1L, k = k)
         .where(!ops.AnnIndex.deleteSplit)
@@ -197,9 +198,10 @@ class Round16OpsSpec extends SparkSpec {
         .select(col("cell"), col("embedding")), "cell")
     assert(after.exceptAll(onePass).count() === 0L &&
       onePass.exceptAll(after).count() === 0L)
-    val masked = ops.AnnIndex.postingsAfterDelete(spark, dir, k = k)
+    val masked = ops.AnnIndex.postingsAsOf(spark, dir, 2L, k = k,
+      chain = "md")
     val compacted = ops.AnnIndex
-      .compactedPostingsAfterDelete(spark, dir, k = k)
+      .compactedHeadPostings(spark, dir, k = k, chain = "md")
     assert(masked.exceptAll(compacted).count() === 0L &&
       compacted.exceptAll(masked).count() === 0L,
       "compaction must carry exactly the surviving rows")

@@ -209,6 +209,23 @@ class Round17OpsSpec extends SparkSpec {
       "epoch rotation must not touch the old chain's bytes")
   }
 
+  test("Chains.compactionPolicy at both thresholds: 1 tombstone of 8 " +
+      "(share exactly 125000) compacts, 1 of 9 (111111) keeps, 4 " +
+      "segments with no tombstones compact, 3 keep") {
+    import spark.implicits._
+    val stats = Seq(("t1of8", 3, 7L, 1L), ("t1of9", 3, 8L, 1L),
+        ("s4", 4, 10L, 0L), ("s3", 3, 10L, 0L))
+      .toDF("chain", "n_segments", "n_live", "n_tomb")
+    val got = ops.Chains.compactionPolicy(stats)
+      .select("chain", "tomb_share_e6", "compact").collect()
+      .map(r => r.getString(0) -> (r.getLong(1), r.getBoolean(2))).toMap
+    assert(got === Map("t1of8" -> (125000L, true),
+      "t1of9" -> (111111L, false), "s4" -> (0L, true),
+      "s3" -> (0L, false)))
+    assert(ops.Chains.compactDecisions(stats) === got.map {
+      case (ch, (_, c)) => ch -> c })
+  }
+
   test("q324 compaction policy: every input is a store read, both " +
       "rule arms fire INDEPENDENTLY on the fixture (md compacts on " +
       "tombstone share alone, c4 on segment count alone), and the " +
@@ -445,7 +462,7 @@ class Round17OpsSpec extends SparkSpec {
       "framesAfterDelete ≡ md-chain head state ≡ survivors from " +
       "scratch, on both arms") {
     val docs = Tables.load(spark, dir, "documents")
-    val f = ops.LexIndex.framesAfterDelete(spark, dir)
+    val f = ops.LexIndex.framesAsOf(spark, dir, 2L, "md")
     val scratch = ops.LexIndex.buildFrames(
       docs.where(!ops.LexIndex.deleteSplit))
     assert(f._3.exceptAll(scratch._3).count() === 0L &&
@@ -453,7 +470,8 @@ class Round17OpsSpec extends SparkSpec {
       "post-delete df must equal the survivors' df")
     assert(f._4.collect().toSeq === scratch._4.collect().toSeq)
     val (k, _) = ops.AnnIndex.sizedParams(spark, dir)
-    val masked = ops.AnnIndex.postingsAfterDelete(spark, dir, k = k)
+    val masked = ops.AnnIndex.postingsAsOf(spark, dir, 2L, k = k,
+      chain = "md")
       .select("vec_id")
     val want = Tables.load(spark, dir, "embeddings")
       .where(!ops.AnnIndex.deleteSplit).select("vec_id")
